@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from medea_spark.checks import (
     chi_square_statistic,
     column_stats,
+    diff_tables,
     duplicate_keys,
     lang_size_histogram,
     top_k,
@@ -704,12 +705,7 @@ def q_docs_setdiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a = docs.filter(F.col("lang") == "en").select("doc_id")
     b = docs.filter(F.col("source") == "src0").select("doc_id")
-    return (
-        a.exceptAll(b)
-        .withColumn("side", F.lit("a_only"))
-        .unionByName(b.exceptAll(a).withColumn("side", F.lit("b_only")))
-        .orderBy("side", "doc_id")
-    )
+    return diff_tables(a, b).orderBy("side", "doc_id")
 
 
 _CORPUS_ORACLE_PATH = f"{_STAGE_ROOT}/corpus_validation"

@@ -162,14 +162,17 @@ def psi_statistic(
         F.coalesce(F.col("b"), F.lit(0)).alias("b"),
     )
     totals = joined.agg(F.sum("o").alias("n_cur"), F.sum("b").alias("n_base"))
-    # nullif-guard the totals (matching ks_statistic): an empty side
-    # yields NULL metrics instead of an ANSI DIVIDE_BY_ZERO job failure.
+    # An empty side yields a NULL psi (matching ks_statistic), not an
+    # ANSI DIVIDE_BY_ZERO job failure.  The gate must sit outside the
+    # floor: greatest() skips NULLs, so greatest(NULL, eps) is eps.
     with_p = joined.crossJoin(F.broadcast(totals)).select(
-        F.greatest(
-            F.col("o") / F.nullif(F.col("n_cur"), F.lit(0)), F.lit(epsilon)
+        F.when(
+            F.col("n_cur") != 0,
+            F.greatest(F.col("o") / F.col("n_cur"), F.lit(epsilon)),
         ).alias("p"),
-        F.greatest(
-            F.col("b") / F.nullif(F.col("n_base"), F.lit(0)), F.lit(epsilon)
+        F.when(
+            F.col("n_base") != 0,
+            F.greatest(F.col("b") / F.col("n_base"), F.lit(epsilon)),
         ).alias("q"),
     )
     return with_p.agg(

@@ -2,8 +2,9 @@
 
 Real repo-file corpora at 10^12 scale are heavily duplicated across
 repos and commits (licenses, lockfiles, vendored deps — frequently
-30-60% of rows).  Batch-level memoization (make_validation_udf) only
-catches co-located duplicates; this operator deduplicates *globally*:
+30-60% of rows).  The kernel's per-batch memo (validate_batch) only
+catches duplicates that share an Arrow batch; this operator
+deduplicates *globally*:
 
     rows → (content_key = xxhash64(content)) →
     distinct(content_key, content)  [one shuffle of distinct contents]
@@ -30,7 +31,12 @@ from pyspark.sql import functions as F
 
 from medea_spark.compiler.analyzer import SchemaGraph
 from medea_spark.engine.partitioning import with_partition_columns
-from medea_spark.engine.validate import ValidationRun, make_validation_udf
+from medea_spark.engine.validate import (
+    ValidationRun,
+    _validation_run,
+    attach_verdict,
+    make_validation_udf,
+)
 
 
 def validate_table_deduped(
@@ -55,41 +61,11 @@ def validate_table_deduped(
         "_clen", F.coalesce(F.length(F.col(content_col)), F.lit(-1))
     )
     distinct = keyed.select("_ck", "_clen", content_col).dropDuplicates(["_ck", "_clen"])
-    udf = make_validation_udf(graph, memoize=False)
-    verdicts = distinct.withColumn("_vr", udf(F.col(content_col))).select(
-        "_ck",
-        "_clen",
-        F.col("_vr.is_valid").alias("is_valid"),
-        F.col("_vr.violations").alias("violations"),
-    )
+    verdicts = attach_verdict(
+        distinct, make_validation_udf(graph)(F.col(content_col))
+    ).select("_ck", "_clen", "is_valid", "violations")
     validated = keyed.join(verdicts, ["_ck", "_clen"], "left").drop("_ck", "_clen")
     validated = with_partition_columns(
         validated, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
     )
-    if with_sha256:
-        validated = validated.withColumn(
-            "content_sha256", F.sha2(F.col(content_col), 256)
-        )
-    validated = validated.withColumn("n_violations", F.size("violations"))
-
-    from medea_spark.engine.partitioning import PART_ID, SALT_ID
-
-    violations = (
-        validated.filter(~F.col("is_valid"))
-        .select(*key_cols, PART_ID, F.explode("violations").alias("v"))
-        .select(
-            *key_cols,
-            PART_ID,
-            F.col("v.json_pointer").alias("json_pointer"),
-            F.col("v.failed_constraint").alias("failed_constraint"),
-            F.col("v.schema_name").alias("schema_name"),
-        )
-    )
-    summary = validated.groupBy(PART_ID).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("is_valid").cast("long")).alias("valid_rows"),
-        F.sum((~F.col("is_valid")).cast("long")).alias("invalid_rows"),
-        F.sum("n_violations").alias("violation_count"),
-        F.countDistinct(SALT_ID).alias("salt_buckets_seen"),
-    )
-    return ValidationRun(validated=validated, violations=violations, summary=summary)
+    return _validation_run(validated, content_col, key_cols, with_sha256)

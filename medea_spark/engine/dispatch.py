@@ -4,15 +4,14 @@ Real corpora are heterogeneous: one table carries several file
 families (by language, source, event type, path prefix), each with its
 own schema.  Validating them should not need one job per family —
 this module validates ALL families in ONE pass: a data column names
-the schema, and the kernel UDF slices each Arrow batch by that key and
-validates every slice against its family's compiled graph.
+the schema, the UDF resolves each row's key to its family's compiled
+graph, and the shared batch core (:func:`validate_batch`, also behind
+the single-schema and version-keyed UDFs) validates the batch, with
+one content memo per graph.
 
-This generalizes :mod:`medea_spark.engine.temporal`'s per-version
-batch slicing (there the key is computed from the event timestamp;
-here it is any string column).  Plan shape is identical to the
-flagship path: scan → one Arrow kernel stage — no shuffle, no join,
-no per-family filter-and-union fan-out (which would scan the table
-once per family).
+Plan shape is identical to the flagship path: scan → one Arrow kernel
+stage — no shuffle, no join, no per-family filter-and-union fan-out
+(which would scan the table once per family).
 
 Rows whose key has no registered schema fail with the dedicated
 ``NO_SCHEMA_FOR_KEY`` constraint — deterministic and queryable, never
@@ -26,8 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.engine.validate import RESULT_STRUCT
-from medea_spark.kernel.validator import NOT_JSON, validate_document
+from medea_spark.engine.validate import attach_verdict, kernel_udf
+from medea_spark.kernel.batch import validate_batch
 
 NO_SCHEMA_FOR_KEY = "NO_SCHEMA_FOR_KEY"
 
@@ -35,62 +34,21 @@ NO_SCHEMA_FOR_KEY = "NO_SCHEMA_FOR_KEY"
 def make_dispatch_validation_udf(
     graphs: dict[str, SchemaGraph], default_key: str | None = None
 ):
-    """Arrow-vectorized kernel UDF over (content, key): each batch is
-    grouped by key and every group's slice validates against that
-    key's compiled graph — the graph lookup happens once per
-    (batch, key), not once per row.  NULL/unregistered keys resolve to
-    ``default_key``'s graph when given, else fail NO_SCHEMA_FOR_KEY."""
+    """Arrow-vectorized kernel UDF over (content, key): each row
+    validates against its key's compiled graph.  NULL/unregistered keys
+    resolve to ``default_key``'s graph when given, else fail
+    NO_SCHEMA_FOR_KEY."""
     if default_key is not None and default_key not in graphs:
         raise ValueError(f"default_key {default_key!r} is not a registered schema key")
+    missing = NO_SCHEMA_FOR_KEY if default_key is None else graphs[default_key]
 
     def _validate_batch(contents: pd.Series, keys: pd.Series) -> pd.DataFrame:
-        n = len(contents)
-        valids = [False] * n
-        violations: list[list[dict]] = [[] for _ in range(n)]
-        # slice by key: positions (0..n-1) grouped on the key value,
-        # NULL kept as its own group — one graph lookup per (batch, key)
-        pos_by_key: dict = {}
-        for i, k in enumerate(keys.tolist()):
-            if k is not None and not isinstance(k, str) and pd.isna(k):
-                k = None
-            pos_by_key.setdefault(k, []).append(i)
-        for key, pos in pos_by_key.items():
-            graph = None
-            if key is not None and key in graphs:
-                graph = graphs[key]
-            elif default_key is not None:
-                graph = graphs[default_key]
-            if graph is None:
-                for i in pos:
-                    violations[i] = [
-                        {
-                            "json_pointer": "",
-                            "failed_constraint": NO_SCHEMA_FOR_KEY,
-                            "schema_name": "",
-                        }
-                    ]
-                continue
-            for i in pos:
-                content = contents.iat[i]
-                if content is None:
-                    violations[i] = [
-                        {
-                            "json_pointer": "",
-                            "failed_constraint": NOT_JSON,
-                            "schema_name": "",
-                        }
-                    ]
-                    continue
-                ok, viols = validate_document(graph, content)
-                valids[i] = ok
-                violations[i] = [
-                    {"json_pointer": p, "failed_constraint": c, "schema_name": s}
-                    for p, c, s in viols
-                ]
-        return pd.DataFrame({"is_valid": valids, "violations": violations})
+        get = graphs.get
+        return validate_batch(
+            contents.tolist(), [get(k, missing) for k in keys.tolist()]
+        )
 
-    # Evaluate-once pledge (repo convention — see make_validation_udf).
-    return F.pandas_udf(_validate_batch, RESULT_STRUCT).asNondeterministic()
+    return kernel_udf(_validate_batch)
 
 
 def validate_table_dispatched(
@@ -106,9 +64,4 @@ def validate_table_dispatched(
     if not schemas:
         raise ValueError("empty schema registry")
     udf = make_dispatch_validation_udf(schemas, default_key)
-    out = df.withColumn("_vr", udf(F.col(content_col), F.col(key_col)))
-    return (
-        out.withColumn("is_valid", F.col("_vr.is_valid"))
-        .withColumn("violations", F.col("_vr.violations"))
-        .drop("_vr")
-    )
+    return attach_verdict(df, udf(F.col(content_col), F.col(key_col)))

@@ -11,9 +11,9 @@ boundary literals — whole-stage codegen, zero join, zero shuffle, zero
 row blowup).  The generic |facts| × |versions| expand-then-argmax
 as-of join shape is never materialized.
 
-Validation then dispatches per row to the compiled graph of its
-version inside one Arrow batch loop (grouped by version, so each
-version's batch slice validates with plain kernel calls).
+Validation then resolves each row's version to its compiled graph and
+hands the Arrow batch to the shared kernel batch core
+(:func:`~medea_spark.kernel.batch.validate_batch`).
 
 All boundary arithmetic is in integral microseconds (``unix_micros`` /
 DuckDB ``epoch_us``) — engine-portable, hash-exact.
@@ -27,11 +27,10 @@ from datetime import datetime
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.engine.validate import RESULT_STRUCT
-from medea_spark.kernel.validator import NOT_JSON, validate_document
+from medea_spark.engine.validate import attach_verdict, kernel_udf
+from medea_spark.kernel.batch import validate_batch
 
 
 @dataclass(frozen=True)
@@ -105,47 +104,21 @@ NO_ACTIVE_SCHEMA = "NO_ACTIVE_SCHEMA"
 
 
 def make_versioned_validation_udf(graphs: dict[int, SchemaGraph]):
-    """Arrow-vectorized kernel UDF over (content, version): each batch
-    is sliced by version and validated against that version's compiled
-    graph.  Rows with a NULL version (no schema active at their event
-    time) fail with the dedicated NO_ACTIVE_SCHEMA constraint —
-    deterministic and queryable, never a silent guess."""
+    """Arrow-vectorized kernel UDF over (content, version): each row
+    validates against its version's compiled graph.  Rows with a NULL
+    version (no schema active at their event time) fail with the
+    dedicated NO_ACTIVE_SCHEMA constraint — deterministic and
+    queryable, never a silent guess."""
 
     def _validate_batch(contents: pd.Series, versions: pd.Series) -> pd.DataFrame:
-        n = len(contents)
-        valids = [False] * n
-        violations: list[list[dict]] = [[] for _ in range(n)]
-        for i in range(n):
-            v = versions.iat[i]
-            if pd.isna(v):
-                violations[i] = [
-                    {
-                        "json_pointer": "",
-                        "failed_constraint": NO_ACTIVE_SCHEMA,
-                        "schema_name": "",
-                    }
-                ]
-                continue
-            content = contents.iat[i]
-            if content is None:
-                violations[i] = [
-                    {
-                        "json_pointer": "",
-                        "failed_constraint": NOT_JSON,
-                        "schema_name": "",
-                    }
-                ]
-                continue
-            ok, viols = validate_document(graphs[int(v)], content)
-            valids[i] = ok
-            violations[i] = [
-                {"json_pointer": p, "failed_constraint": c, "schema_name": s}
-                for p, c, s in viols
-            ]
-        return pd.DataFrame({"is_valid": valids, "violations": violations})
+        # NULL versions arrive as NaN (float column), which no int key matches
+        get = graphs.get
+        return validate_batch(
+            contents.tolist(),
+            [get(v, NO_ACTIVE_SCHEMA) for v in versions.tolist()],
+        )
 
-    # Evaluate-once pledge (repo convention — see make_validation_udf).
-    return F.pandas_udf(_validate_batch, RESULT_STRUCT).asNondeterministic()
+    return kernel_udf(_validate_batch)
 
 
 def validate_table_versioned(
@@ -163,11 +136,4 @@ def validate_table_versioned(
     out = df.withColumn(
         "schema_version", assign_schema_version(F.col(ts_col), versions)
     )
-    out = out.withColumn(
-        "_vr", udf(F.col(content_col), F.col("schema_version"))
-    )
-    return (
-        out.withColumn("is_valid", F.col("_vr.is_valid"))
-        .withColumn("violations", F.col("_vr.violations"))
-        .drop("_vr")
-    )
+    return attach_verdict(out, udf(F.col(content_col), F.col("schema_version")))

@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -31,7 +31,7 @@ from medea_spark.engine.partitioning import (
     SALT_ID,
     repartition_for_validation,
 )
-from medea_spark.kernel.validator import NOT_JSON, validate_document
+from medea_spark.kernel.batch import validate_batch
 
 VIOLATION_STRUCT = T.StructType(
     [
@@ -49,61 +49,41 @@ RESULT_STRUCT = T.StructType(
 )
 
 
-def make_validation_udf(
-    graph: SchemaGraph, collect_all: bool = False, memoize: bool = True
-):
-    """Build the Arrow-vectorized validation kernel UDF.
+def kernel_udf(fn):
+    """Wrap a batch function returning ``validate_batch`` frames as the
+    kernel pandas UDF.
+
+    asNondeterministic despite the kernel being pure: it is an
+    *evaluate-once* pledge to Catalyst.  Otherwise a plan that filters
+    on _vr.is_valid and projects _vr.violations re-runs the whole
+    kernel per reference (CollapseProject dedupes only within one
+    Project) — measured 3x on the violation-census query shape."""
+    return F.pandas_udf(fn, RESULT_STRUCT).asNondeterministic()
+
+
+def make_validation_udf(graph: SchemaGraph, collect_all: bool = False):
+    """Build the Arrow-vectorized validation kernel UDF: every row
+    against ``graph``.
 
     The compiled graph is small (≪1 MB); closing over it ships it once
     per task via the pickled UDF — the per-executor cost a broadcast
-    would have, without the extra plumbing.
-
-    ``memoize`` enables per-batch verdict caching keyed by content
-    bytes: validation is a pure function of content, and real repo-file
-    corpora are duplicate-heavy (vendored licenses, lockfiles, generated
-    code), so identical documents inside an Arrow batch validate once.
-    Zero-copy dict lookup; negligible cost when all contents are unique.
-    """
-
-    _none_result = (
-        False,
-        [{"json_pointer": "", "failed_constraint": NOT_JSON, "schema_name": ""}],
-    )
+    would have, without the extra plumbing."""
 
     def _validate_batch(batch: pd.Series) -> pd.DataFrame:
-        valids: list[bool] = []
-        violations: list[list[dict]] = []
-        vd = validate_document
-        cache: dict = {}
-        get = cache.get
-        for content in batch.tolist():
-            if content is None:
-                valids.append(_none_result[0])
-                violations.append(_none_result[1])
-                continue
-            if memoize:
-                hit = get(content)
-                if hit is not None:
-                    valids.append(hit[0])
-                    violations.append(hit[1])
-                    continue
-            ok, viols = vd(graph, content, collect_all)
-            out = [
-                {"json_pointer": p, "failed_constraint": c, "schema_name": s}
-                for p, c, s in viols
-            ]
-            if memoize:
-                cache[content] = (ok, out)
-            valids.append(ok)
-            violations.append(out)
-        return pd.DataFrame({"is_valid": valids, "violations": violations})
+        return validate_batch(batch.tolist(), graph, collect_all)
 
-    # asNondeterministic despite the kernel being pure: it is an
-    # *evaluate-once* pledge to Catalyst.  Otherwise a plan that
-    # filters on _vr.is_valid and projects _vr.violations re-runs the
-    # whole kernel per reference (CollapseProject dedupes only within
-    # one Project) — measured 3x on the violation-census query shape.
-    return F.pandas_udf(_validate_batch, RESULT_STRUCT).asNondeterministic()
+    return kernel_udf(_validate_batch)
+
+
+def attach_verdict(df: DataFrame, verdict: Column) -> DataFrame:
+    """``df`` plus the ``is_valid`` / ``violations`` fields of a kernel
+    UDF's ``verdict`` column."""
+    return (
+        df.withColumn("_vr", verdict)
+        .withColumn("is_valid", F.col("_vr.is_valid"))
+        .withColumn("violations", F.col("_vr.violations"))
+        .drop("_vr")
+    )
 
 
 def _offending_value_series(contents, pointers):
@@ -195,11 +175,24 @@ def validate_table(
             df, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
         )
 
-    udf = make_validation_udf(graph, collect_all)
-    validated = base.withColumn("_vr", udf(F.col(content_col)))
-    validated = validated.withColumn("is_valid", F.col("_vr.is_valid")).withColumn(
-        "violations", F.col("_vr.violations")
-    ).drop("_vr")
+    validated = attach_verdict(
+        base, make_validation_udf(graph, collect_all)(F.col(content_col))
+    )
+    return _validation_run(
+        validated, content_col, key_cols, with_sha256, observe, with_offending_values
+    )
+
+
+def _validation_run(
+    validated: DataFrame,
+    content_col: str,
+    key_cols: tuple[str, ...],
+    with_sha256: bool,
+    observe: "Observation | None" = None,
+    with_offending_values: bool = False,
+) -> ValidationRun:
+    """The three output relations from a table that already carries the
+    verdict and the partition columns."""
     if with_sha256:
         # Per-row identity invariant vs the fixture corpus (BASELINE.json
         # input_hint): sha256 of the exact content bytes, computed JVM-side.

@@ -94,19 +94,3 @@ def pack_shards(
     )
     return out.withColumn("bucket", F.col(_BUCKET).cast("int")).drop(_BUCKET, _RAW)
 
-
-def shard_summary(packed: DataFrame, tokens_col: str) -> DataFrame:
-    """Per-shard row/token totals from ``pack_shards`` output — the
-    audit read that shows every shard is within one document of the
-    budget.  One map-side-combined hash aggregate on (bucket,
-    shard_seq)."""
-    return (
-        packed.groupBy("bucket", "shard_seq")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.coalesce(F.col(tokens_col).cast("bigint"), F.lit(0))).alias(
-                "shard_token_total"
-            ),
-        )
-        .orderBy("bucket", "shard_seq")
-    )

@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.engine.validate import make_validation_udf
+from medea_spark.engine.validate import attach_verdict, make_validation_udf
 
 
 def validate_stream(
@@ -36,13 +36,7 @@ def validate_stream(
 ) -> DataFrame:
     """Attach the kernel verdict to a streaming DataFrame (stateless —
     identical semantics to the batch path)."""
-    udf = make_validation_udf(graph)
-    return (
-        stream_df.withColumn("_vr", udf(F.col(content_col)))
-        .withColumn("is_valid", F.col("_vr.is_valid"))
-        .withColumn("violations", F.col("_vr.violations"))
-        .drop("_vr")
-    )
+    return attach_verdict(stream_df, make_validation_udf(graph)(F.col(content_col)))
 
 
 def dispatch_stream(
@@ -60,12 +54,7 @@ def dispatch_stream(
     from medea_spark.engine.dispatch import make_dispatch_validation_udf
 
     udf = make_dispatch_validation_udf(schemas, default_key)
-    return (
-        stream_df.withColumn("_vr", udf(F.col(content_col), F.col(key_col)))
-        .withColumn("is_valid", F.col("_vr.is_valid"))
-        .withColumn("violations", F.col("_vr.violations"))
-        .drop("_vr")
-    )
+    return attach_verdict(stream_df, udf(F.col(content_col), F.col(key_col)))
 
 
 def windowed_violation_counts(

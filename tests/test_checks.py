@@ -104,6 +104,19 @@ def test_psi_statistic_orders_drift(spark):
     assert got == want
 
 
+def test_psi_statistic_empty_side_is_null(spark):
+    """An empty current or baseline side gives a NULL psi (like
+    ks_statistic), not the finite value an epsilon floor would invent."""
+    from medea_spark.checks import psi_statistic
+
+    full = spark.createDataFrame([("a", 90), ("b", 10)], ["lang", "cnt"])
+    empty = full.limit(0)
+    for cur, bas in ((empty, full), (full, empty)):
+        row = psi_statistic(cur, bas).collect()[0]
+        assert row.psi is None
+        assert row.n_cells == 2
+
+
 def test_chi_square_p_value_sanity():
     # Known quantiles: chi2(0.95, dof=4) ≈ 9.488, chi2(0.99, dof=4) ≈ 13.277
     assert math.isclose(chi_square_p_value(9.488, 4), 0.05, abs_tol=2e-3)
