@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -35,6 +35,18 @@ def lang_size_histogram(
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def _cells(current: DataFrame, baseline: DataFrame, on: list[str]) -> DataFrame:
+    """The shared cell universe of two histograms: (on..., o, b), a
+    cell absent on one side counting 0 there (full-outer join)."""
+    cur = current.groupBy(*on).agg(F.sum("cnt").alias("o"))
+    base = baseline.groupBy(*on).agg(F.sum("cnt").alias("b"))
+    return cur.join(base, on=on, how="full_outer").select(
+        *on,
+        F.coalesce(F.col("o"), F.lit(0)).alias("o"),
+        F.coalesce(F.col("b"), F.lit(0)).alias("b"),
+    )
+
+
 def chi_square_statistic(
     current: DataFrame, baseline: DataFrame, on: list[str] | None = None
 ) -> DataFrame:
@@ -44,23 +56,27 @@ def chi_square_statistic(
     total; cells absent on one side get count 0 (full-outer join).
     Cells with zero baseline get a 0.5 pseudo-count so novel categories
     register as drift instead of dividing by zero.
+
+    The totals are whole-frame window sums over the joined cells (as in
+    ``ks_statistic``): a separate totals aggregate broadcast back through
+    a cross join would evaluate the histogram chain twice.  The window
+    has one partition, but it holds only the histogram's cells.
     """
-    on = on or ["lang"]
-    cur = current.groupBy(*on).agg(F.sum("cnt").alias("o"))
-    base = baseline.groupBy(*on).agg(F.sum("cnt").alias("b"))
-    joined = cur.join(base, on=on, how="full_outer").select(
-        *on,
-        F.coalesce(F.col("o"), F.lit(0)).alias("o"),
-        F.coalesce(F.col("b"), F.lit(0)).alias("b"),
-    )
-    totals = joined.agg(
-        F.sum("o").alias("n_cur"), F.sum("b").alias("n_base")
-    )
-    with_e = joined.crossJoin(F.broadcast(totals)).withColumn(
-        "e",
-        F.when(
-            F.col("b") > 0, F.col("b") * F.col("n_cur") / F.col("n_base")
-        ).otherwise(F.lit(0.5)),
+    whole = Window.partitionBy()
+    with_e = (
+        _cells(current, baseline, on or ["lang"])
+        .select(
+            "o",
+            "b",
+            F.sum("o").over(whole).alias("n_cur"),
+            F.sum("b").over(whole).alias("n_base"),
+        )
+        .withColumn(
+            "e",
+            F.when(
+                F.col("b") > 0, F.col("b") * F.col("n_cur") / F.col("n_base")
+            ).otherwise(F.lit(0.5)),
+        )
     )
     return with_e.agg(
         F.sum(((F.col("o") - F.col("e")) ** 2) / F.col("e")).alias("statistic"),
@@ -153,14 +169,7 @@ def psi_statistic(
     or vanished categories contribute large-but-finite terms.  Pure
     relational + ``ln`` — IEEE-portable, engine-differential-testable.
     """
-    on = on or ["lang"]
-    cur = current.groupBy(*on).agg(F.sum("cnt").alias("o"))
-    base = baseline.groupBy(*on).agg(F.sum("cnt").alias("b"))
-    joined = cur.join(base, on=on, how="full_outer").select(
-        *on,
-        F.coalesce(F.col("o"), F.lit(0)).alias("o"),
-        F.coalesce(F.col("b"), F.lit(0)).alias("b"),
-    )
+    joined = _cells(current, baseline, on or ["lang"])
     totals = joined.agg(F.sum("o").alias("n_cur"), F.sum("b").alias("n_base"))
     # An empty side yields a NULL psi (matching ks_statistic), not an
     # ANSI DIVIDE_BY_ZERO job failure.  The gate must sit outside the
@@ -219,8 +228,6 @@ def ks_statistic(
     1/bins that keeps the window input constant-size.  The exact
     (unbinned) path is what the DuckDB oracle replays — identical
     cumulative sums, IEEE division, round(6)."""
-    from pyspark.sql import Window
-
     by = list(by or [])
 
     def side(df: DataFrame, name: str) -> DataFrame:
@@ -341,8 +348,6 @@ def wasserstein_distance(
     pre-quantize (e.g. via ``F.round``) for genuinely continuous
     high-cardinality columns at 100 TB.  The DuckDB oracle replays the
     identical cumulative sums, lead gaps, IEEE arithmetic, round(6)."""
-    from pyspark.sql import Window
-
     def side(df: DataFrame, name: str) -> DataFrame:
         return (
             df.select(F.col(col).cast("double").alias("x"))

@@ -21,7 +21,9 @@ def column_stats(
 
     ``distinct_count`` uses HLL++ (``approx_count_distinct``) by default
     — the 100 TB answer; ``exact_distinct=True`` switches to exact
-    count-distinct for oracle comparisons at test scale.
+    count-distinct for oracle comparisons at test scale.  The exact path
+    plans one aggregate per column, each re-executing ``df``: pass a
+    scan or a persisted frame, never an expensive uncached pipeline.
     """
     cols = cols or df.columns
     aggs = []

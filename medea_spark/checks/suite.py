@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -218,4 +219,9 @@ def run_check_suite(df: DataFrame, rules: list[Rule]) -> DataFrame:
         metric = int(row[f"m{i}"] or 0)
         passed = metric >= r.threshold if r.at_least else metric <= r.threshold
         records.append((r.rule_id, r.kind, r.column, metric, int(r.threshold), passed))
-    return spark.createDataFrame(records, RESULT_SCHEMA)
+    # A pandas frame (Arrow on) plans a LocalRelation that every consumer
+    # reads without a job; a list of tuples would plan a LogicalRDD whose
+    # every read runs Python-worker tasks.
+    return spark.createDataFrame(
+        pd.DataFrame.from_records(records, columns=RESULT_SCHEMA.names), RESULT_SCHEMA
+    )

@@ -19,12 +19,14 @@ checkpointing, so run-to-run stability is not required.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(df: DataFrame, keys: list[str], salted: bool = False, salt_buckets: int = 32) -> DataFrame:
-    """Keys appearing more than once: (keys..., dup_count)."""
+def _key_counts(df: DataFrame, keys: list[str], salted: bool, salt_buckets: int = 32) -> DataFrame:
+    """One row per key group, NULL key parts included: (keys..., dup_count)."""
     if salted:
         phase1 = (
             df.select(*keys)
@@ -32,22 +34,30 @@ def duplicate_keys(df: DataFrame, keys: list[str], salted: bool = False, salt_bu
             .groupBy(*keys, "_salt")
             .agg(F.count(F.lit(1)).alias("_partial"))
         )
-        counted = phase1.groupBy(*keys).agg(F.sum("_partial").alias("dup_count"))
-    else:
-        counted = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
-    return counted.filter(F.col("dup_count") > 1)
+        return phase1.groupBy(*keys).agg(F.sum("_partial").alias("dup_count"))
+    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
+
+
+def duplicate_keys(df: DataFrame, keys: list[str], salted: bool = False, salt_buckets: int = 32) -> DataFrame:
+    """Keys appearing more than once: (keys..., dup_count)."""
+    return _key_counts(df, keys, salted, salt_buckets).filter(F.col("dup_count") > 1)
 
 
 def uniqueness_report(df: DataFrame, keys: list[str], salted: bool = False) -> DataFrame:
     """One-row summary: total rows, distinct keys, duplicate keys,
-    surplus rows (rows that would be dropped by a dedup)."""
-    dups = duplicate_keys(df, keys, salted=salted)
-    agg = dups.agg(
-        F.coalesce(F.count(F.lit(1)), F.lit(0)).alias("duplicate_keys"),
-        F.coalesce(F.sum(F.col("dup_count") - 1), F.lit(0)).alias("surplus_rows"),
+    surplus rows (rows that would be dropped by a dedup).
+
+    All four numbers come from ONE pass over the per-key counts, so the
+    input is scanned once.  ``distinct_keys`` keeps SQL
+    ``count(distinct k1, k2, ...)`` semantics: a key with any NULL part
+    is not counted.  ``duplicate_keys`` and ``surplus_rows`` do count a
+    repeated NULL-part key, as ``duplicate_keys()`` reports it.  Empty
+    input gives four zeros."""
+    dup = F.col("dup_count") > 1
+    complete = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    return _key_counts(df, keys, salted).agg(
+        F.coalesce(F.sum("dup_count"), F.lit(0)).alias("total_rows"),
+        F.count_if(complete).alias("distinct_keys"),
+        F.count_if(dup).alias("duplicate_keys"),
+        F.coalesce(F.sum(F.when(dup, F.col("dup_count") - 1)), F.lit(0)).alias("surplus_rows"),
     )
-    total = df.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("distinct_keys"),
-    )
-    return total.crossJoin(agg)

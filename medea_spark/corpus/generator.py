@@ -319,4 +319,7 @@ def dim_repos(spark: SparkSession, seed: int = 42, n_repos: int = 64, orphan_eve
     names = ["repo-mono"] + [
         f"repo-{i:04d}" for i in range(n_repos) if orphan_every == 0 or i % orphan_every != 0
     ]
-    return spark.createDataFrame([(n,) for n in names], ["repo"])
+    # pandas input (Arrow on) plans a job-free LocalRelation
+    return spark.createDataFrame(
+        pd.DataFrame({"repo": names}), T.StructType([T.StructField("repo", T.StringType())])
+    )

@@ -773,3 +773,143 @@ def test_pairwise_corr_hand_cases(spark):
 
     with _pytest.raises(ValueError):
         pairwise_corr(df, ["x"])
+
+
+def test_uniqueness_report_null_key_parts(spark):
+    """distinct_keys skips keys with a NULL part (SQL count(distinct)),
+    while duplicate_keys and surplus_rows count a repeated NULL-part
+    key like any other; the salted path gives the same numbers."""
+    rows = (
+        [("r1", "p1")] * 2
+        + [("r1", None)] * 3
+        + [(None, None)]
+        + [("r2", "p2")]
+    )
+    df = spark.createDataFrame(rows, "repo string, path string").repartition(3)
+    keys = ["repo", "path"]
+    plain = uniqueness_report(df, keys).collect()
+    salted = uniqueness_report(df, keys, salted=True).collect()
+    assert plain == salted
+    assert plain[0].asDict() == {
+        "total_rows": 7,
+        "distinct_keys": 2,
+        "duplicate_keys": 2,
+        "surplus_rows": 3,
+    }
+    dups = {(r.repo, r.path): r.dup_count for r in duplicate_keys(df, keys).collect()}
+    assert dups == {("r1", "p1"): 2, ("r1", None): 3}
+
+
+def test_uniqueness_report_empty_input(spark):
+    """Empty input: four zeros, not NULLs, on both paths."""
+    empty = spark.createDataFrame([], "repo string, path string")
+    for salted in (False, True):
+        row = uniqueness_report(empty, ["repo", "path"], salted=salted).collect()
+        assert [tuple(r) for r in row] == [(0, 0, 0, 0)]
+
+
+def test_referential_report_dim_duplicates_and_nulls(spark):
+    """Duplicate and NULL dimension keys change nothing: the same
+    orphan rows, most orphan rows first, ties by key (NULL first)."""
+    fact = spark.createDataFrame(
+        [(k,) for k in ["k1"] * 3 + ["k2"] + ["k3"] * 2 + ["k5"] * 2 + [None] + ["k4"] * 3],
+        "k string",
+    ).repartition(3)
+    messy = spark.createDataFrame([("k1",), ("k1",), ("k2",), (None,), (None,)], "k string")
+    clean = spark.createDataFrame([("k1",), ("k2",)], "k string")
+    want = [("k4", 3), ("k3", 2), ("k5", 2), (None, 1)]
+    for dim in (messy, clean):
+        assert [tuple(r) for r in referential_report(fact, dim, "k").collect()] == want
+
+
+def test_chi_square_statistic_hand_value(spark):
+    """Hand-computed statistic over a novel cell (zero baseline, 0.5
+    pseudo-count) and a vanished cell (zero current)."""
+    from medea_spark.checks import chi_square_statistic
+
+    cur = spark.createDataFrame([("a", 30), ("b", 10), ("c", 5)], "lang string, cnt long")
+    base = spark.createDataFrame([("a", 20), ("b", 20), ("d", 10)], "lang string, cnt long")
+    row = chi_square_statistic(cur, base).collect()[0]
+    # e = b * 45 / 50 where b > 0, else 0.5
+    want = (30 - 18) ** 2 / 18 + (10 - 18) ** 2 / 18 + (5 - 0.5) ** 2 / 0.5 + (0 - 9) ** 2 / 9
+    assert math.isclose(row.statistic, want, rel_tol=1e-12)
+    assert (row.dof, row.n_current, row.n_baseline) == (3, 45, 50)
+
+
+def test_run_check_suite_rule_order_and_schema(spark):
+    """One result row per rule, in rule order (not id order), typed
+    exactly as RESULT_SCHEMA."""
+    from medea_spark.checks import min_rows, not_null, run_check_suite, unique
+    from medea_spark.checks.suite import RESULT_SCHEMA
+
+    df = spark.createDataFrame([(1, "a"), (1, None)], "id long, x string")
+    rules = [unique(["id"]), min_rows(5), not_null("x"), min_rows(1, rule_id="a_floor")]
+    out = run_check_suite(df, rules)
+    assert out.schema == RESULT_SCHEMA
+    assert [tuple(r) for r in out.collect()] == [
+        ("unique:id", "unique", "id", 1, 0, False),
+        ("min_rows:5", "min_rows", "", 2, 5, False),
+        ("not_null:x", "not_null", "x", 1, 0, False),
+        ("a_floor", "min_rows", "", 2, 1, True),
+    ]
+
+
+@pytest.fixture(scope="module")
+def keyed_scan(spark, tmp_path_factory):
+    """A small parquet scan with duplicate keys, orphan repos and two
+    size buckets per language — the shape the table checks plan on."""
+    path = str(tmp_path_factory.mktemp("checks_jobs") / "keyed.parquet")
+    spark.range(2000).select(
+        F.concat(F.lit("repo-"), F.lpad((F.col("id") % 20).cast("string"), 4, "0")).alias("repo"),
+        F.concat(F.lit("p"), (F.col("id") % 1700).cast("string")).alias("path"),
+        F.lit("c0ffee").alias("commit"),
+        F.element_at(F.array(*map(F.lit, ["json", "yaml", "toml"])), (F.col("id") % 3 + 1).cast("int")).alias("lang"),
+        F.repeat(F.lit("x"), (F.col("id") % 7 + 1).cast("int")).alias("content"),
+    ).repartition(4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _jobs(spark, group, action):
+    """Spark jobs ``action()`` submits, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_check_job_ceilings(spark, keyed_scan):
+    """Each table check stays at its job count (under AQE every query
+    stage is a job); the driver-built relations plan as LocalRelation
+    and are read without any job."""
+    from medea_spark.checks import accepted_values, not_null, run_check_suite, unique
+
+    df = keyed_scan
+    keys = ["repo", "path", "commit"]
+    sized = F.length("content").alias("size")
+    dim = dim_repos(spark, n_repos=20, orphan_every=7)
+    rules = [not_null("content"), accepted_values("lang", ["json", "yaml"]), unique(keys)]
+    checks = {
+        "uniqueness_report": (lambda: uniqueness_report(df, keys).first(), 3),
+        "uniqueness_report_salted": (lambda: uniqueness_report(df, keys, salted=True).first(), 4),
+        "referential_report": (lambda: referential_report(df, dim, "repo").collect(), 3),
+        "drift_decision": (
+            lambda: drift_decision(
+                lang_size_histogram(df.filter(F.col("lang") != "toml").select("lang", sized), "lang", "size"),
+                lang_size_histogram(df.select("lang", sized), "lang", "size"),
+                on=["lang", "size_bucket"],
+            ),
+            5,
+        ),
+        "run_check_suite": (lambda: run_check_suite(df, rules).collect(), 3),
+    }
+    for name, (action, ceiling) in checks.items():
+        got = _jobs(spark, f"ceiling-{name}", action)
+        assert got <= ceiling, (name, got, ceiling)
+
+    suite = run_check_suite(df, rules)
+    for rel in (suite, dim):
+        assert "LocalRelation" in rel._jdf.queryExecution().analyzed().toString()
+    assert _jobs(spark, "ceiling-read-results", lambda: (suite.collect(), dim.collect())) == 0
