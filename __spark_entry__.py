@@ -14,9 +14,7 @@ column name).
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -268,14 +266,19 @@ def q_uniqueness_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return uniqueness_report(ev, ["user_id", "event_type"])
 
 
-# Per-process stage root (round-3 advice): several oracle queries
-# materialize intermediate artifacts (staged shingle relations, fitted
-# centroids, stream replay inputs) that the DuckDB oracle re-reads from
-# the same path — both sides run in one process, so a process-unique
-# root keeps concurrent oracle/bench runs from clobbering each other's
-# staged parquet mid-read.  Cleaned up at interpreter exit.
-_STAGE_ROOT = tempfile.mkdtemp(prefix="medea_oracle_")
-atexit.register(shutil.rmtree, _STAGE_ROOT, ignore_errors=True)
+# Stage root: several oracle queries materialize intermediate artifacts
+# (staged shingle relations, fitted centroids, stream replay inputs)
+# that the DuckDB oracle re-reads from the same path, so the path is
+# spelled into oracle_sql().  A fixed default keeps that text identical
+# in every process; each query overwrites (or first deletes) what it
+# stages, so a rerun never reads a previous run's files.  Runs that may
+# overlap must each set MEDEA_ORACLE_STAGE_ROOT to a root of their own,
+# or one run clobbers the other's staged parquet mid-read.  Nothing is
+# deleted at exit: the root may be shared, and the oracle side may read
+# it from another process.
+_STAGE_ROOT = os.environ.get("MEDEA_ORACLE_STAGE_ROOT") or os.path.join(
+    tempfile.gettempdir(), "medea_oracle"
+)
 
 _STREAM_INPUT_PATH = f"{_STAGE_ROOT}/stream_input"
 

@@ -57,12 +57,6 @@ class IdentifierTooLongError(MedeaParseError):
     code = "IDENTIFIER_TOO_LONG"
 
 
-class ExpectedReservedIdentifierError(MedeaParseError):
-    """Wanted a specific reserved identifier (reference Primitive.hs:123-128)."""
-
-    code = "EXPECTED_RESERVED_IDENTIFIER"
-
-
 class LeadingZeroError(MedeaParseError):
     """Natural number with a leading zero (reference Primitive.hs:154-160)."""
 

@@ -14,7 +14,9 @@ that is what makes per-partition checkpoints trustworthy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 PART_ID = "part_id"
@@ -27,34 +29,28 @@ def detect_skewed_keys(
     skew_fraction: float = 0.05,
     max_keys: int = 64,
 ) -> list[str]:
-    """Pre-pass: keys holding more than ``skew_fraction`` of all rows.
+    """Pre-pass: keys holding at least ``skew_fraction`` of all rows
+    (the threshold is ``max(1, floor(total · skew_fraction))``), largest
+    first, at most ``max_keys`` of them.
 
     One partial-aggregated groupBy over the key column only (column
-    pruning keeps the scan narrow); the result is a tiny driver-side
-    list, bounded by ``max_keys``.
+    pruning keeps the scan narrow), read through a single top-k: every
+    key at or above the threshold is among the ``max_keys`` largest
+    counts, so the driver applies the threshold to those rows.  The
+    total rides the same pass as an observed metric, not a second
+    aggregate or a collect of its own.
     """
-    counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("cnt")).persist()
-    try:
-        # ONE driver read: the total rides the plan as a one-row
-        # broadcast aggregate (the persisted counts relation feeds both
-        # branches), and the threshold — max(1, int(total·fraction)),
-        # int() truncation == floor for non-negative values — is
-        # computed in-plan, so the previous total-collect job is gone.
-        total_rel = counts.agg(F.sum("cnt").alias("_total"))
-        threshold = F.greatest(
-            F.lit(1).cast("long"),
-            F.floor(F.col("_total") * F.lit(skew_fraction)).cast("long"),
-        )
-        rows = (
-            counts.crossJoin(F.broadcast(total_rel))
-            .filter(F.col("cnt") >= threshold)
-            .orderBy(F.desc("cnt"))
-            .limit(max_keys)
-            .collect()
-        )
-    finally:
-        counts.unpersist()
-    return [r[key_col] for r in rows]
+    total = Observation()
+    top = (
+        df.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .observe(total, F.sum("cnt").alias("total"))
+        .orderBy(F.desc("cnt"))
+        .limit(max_keys)
+        .collect()
+    )
+    threshold = max(1, math.floor((total.get["total"] or 0) * skew_fraction))
+    return [r[key_col] for r in top if r["cnt"] >= threshold]
 
 
 def with_partition_columns(

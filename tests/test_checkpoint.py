@@ -249,3 +249,80 @@ def test_stage_write_exchange_includes_salt(spark, store, tmp_path):
     )
     staged = spark.read.parquet(f"{stage}/run=saltstage-*")
     assert staged.select("salt_id").distinct().count() > 1
+
+
+def test_resume_over_stage_written_one_task_per_part(spark, store, tmp_path):
+    """A committed stage written with one write task per part (the wider
+    exchange earlier versions used) resumes as is: it is read, not
+    rewritten, and every row is validated once."""
+    import glob
+    import hashlib
+
+    from medea_spark.engine.partitioning import PART_ID, SALT_ID, with_partition_columns
+
+    df = generate_corpus(spark, 600, seed=13)
+    fp = "corpus-n600-seed13-wide"
+    stage = str(tmp_path / "stage")
+    staged_dir = f"{stage}/run=wide-{hashlib.sha256(fp.encode()).hexdigest()[:8]}"
+    with_partition_columns(df, 8).repartition(8, PART_ID, SALT_ID).write.partitionBy(
+        PART_ID
+    ).parquet(staged_dir)
+    files = sorted(glob.glob(f"{staged_dir}/*/*.parquet"))
+    res = run_validation_with_checkpoints(
+        spark, df, corpus_schema_graph(), store, run_id="wide", num_partitions=8,
+        n_waves=2, input_fingerprint=fp, stage_location=stage,
+    )
+    assert res.parts_done == 8 and res.parts_skipped == 0
+    assert sorted(glob.glob(f"{staged_dir}/*/*.parquet")) == files
+    validated = spark.read.parquet(f"{store.location}/run=wide/wave=*/validated")
+    assert validated.count() == 600
+    assert validated.filter(F.col("is_valid") != F.col("expected_valid")).count() == 0
+    total = store.read().filter(F.col("run_id") == "wide").agg(F.sum("rows")).first()[0]
+    assert total == 600
+
+
+def _jobs_started(spark, action) -> int:
+    """Every Spark job ``action()`` starts.  The checkpoint sink threads
+    carry no job group, so this counts the new ids among the jobs
+    without one; the test session runs nothing else meanwhile."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    action()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+
+
+def test_nightly_job_ceilings(spark, store, tmp_path):
+    """The nightly path at its Spark job counts (under AQE every query
+    stage is a job): the skew pre-pass is one top-k over one aggregate,
+    a summary collect takes one exchange, a run with no checkpoint table
+    looks up its done parts with no job, and a fresh staged 2-wave run
+    stays at its total."""
+    from medea_spark.engine import detect_skewed_keys, validate_table
+
+    src = str(tmp_path / "input")
+    generate_corpus(spark, 1200, seed=21).write.parquet(src)
+    df = spark.read.parquet(src)
+    graph = corpus_schema_graph()
+
+    skewed = []
+    assert _jobs_started(spark, lambda: skewed.extend(detect_skewed_keys(df, "repo"))) <= 2
+    assert skewed == ["repo-mono"]
+    # A salted summary: with no skewed key salt_id is a literal the
+    # optimizer folds out of any distinct count.
+    summary = validate_table(df, graph, num_partitions=4, skewed_keys=skewed).summary
+    assert _jobs_started(spark, summary.collect) <= 2
+    lookup = store.done_part_ids("fresh", schema_fingerprint="fp", input_fingerprint="in")
+    assert _jobs_started(spark, lookup.collect) == 0
+
+    def fresh_run():
+        run_validation_with_checkpoints(
+            spark, df, graph, store, run_id="jobs", num_partitions=8, n_waves=2,
+            skewed_keys=skewed, input_fingerprint="corpus-n1200-seed21",
+            stage_location=str(tmp_path / "stage"),
+        )
+
+    assert _jobs_started(spark, fresh_run) <= 12

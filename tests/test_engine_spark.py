@@ -103,6 +103,42 @@ def test_giant_repo_is_salted(run):
     assert buckets > 1  # monorepo rows spread across salt buckets
 
 
+def _keys(spark, counts: dict):
+    """One ``repo`` row per unit of ``counts[key]``."""
+    rows = [(k,) for k, n in counts.items() for _ in range(n)]
+    return spark.createDataFrame(rows, "repo string")
+
+
+def test_detect_skewed_keys_contracts(spark):
+    """The skew pre-pass keeps keys at or above max(1, floor(total ·
+    fraction)), largest first, at most max_keys; NULL is a key like any
+    other, and empty input names none."""
+    assert detect_skewed_keys(spark.range(0).select(F.lit("r").alias("repo"))) == []
+    assert detect_skewed_keys(spark.createDataFrame([], "repo string").limit(0)) == []
+    # total 100, threshold floor(100 · 0.05) = 5: exactly 5 is kept, 4 is not
+    boundary = {"at": 5, "below": 4, **{f"r{i}": 1 for i in range(91)}}
+    assert detect_skewed_keys(_keys(spark, boundary), skew_fraction=0.05) == ["at"]
+    # total 10, floor(10 · 0.05) = 0, so the threshold is 1: every key
+    small = {"a": 4, "b": 3, "c": 2, "d": 1}
+    assert detect_skewed_keys(_keys(spark, small), skew_fraction=0.05) == ["a", "b", "c", "d"]
+    assert detect_skewed_keys(_keys(spark, small), skew_fraction=0.05, max_keys=2) == ["a", "b"]
+    # total 10, threshold 3: the NULL group (6 rows) leads, "b" (1 row) is dropped
+    with_null = {None: 6, "a": 3, "b": 1}
+    assert detect_skewed_keys(_keys(spark, with_null), skew_fraction=0.3) == [None, "a"]
+
+
+def test_summary_salt_buckets_seen_hand_count(run):
+    """salt_buckets_seen is each part's number of distinct salt ids."""
+    from collections import defaultdict
+
+    seen = defaultdict(set)
+    for r in run.validated.select("part_id", "salt_id").collect():
+        seen[r["part_id"]].add(r["salt_id"])
+    got = {r["part_id"]: r["salt_buckets_seen"] for r in run.summary.collect()}
+    assert got == {p: len(s) for p, s in seen.items()}
+    assert max(got.values()) > 1  # the salted monorepo spreads its part
+
+
 def test_noshuffle_matches_repartitioned(spark, run):
     # The default shuffle-free plan and the clustered plan agree row-for-row.
     df = generate_corpus(spark, 800, seed=42)

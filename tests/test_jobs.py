@@ -1,5 +1,6 @@
 """Smoke tests for the spark-submit job entrypoints (driven in-process
-via the injectable session — the same main() spark-submit runs)."""
+via the injectable session — the same main() spark-submit runs), and
+the driver contract's process independence."""
 
 from __future__ import annotations
 
@@ -65,3 +66,31 @@ def test_ingest_dedup_job_bootstrap_ingest_and_params_guard(spark, tmp_path):
              "--pairs", f"{d}/pairs", "--k", "4"],
             spark=spark,
         )
+
+
+def test_oracle_sql_identical_across_processes():
+    """oracle_sql() spells staged paths into its SQL; the text must not
+    depend on the process (nor on its hash seed) that builds it."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    prog = (
+        "import hashlib, __spark_entry__ as e\n"
+        "print(hashlib.sha256(repr(sorted(e.oracle_sql().items())).encode()).hexdigest())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "MEDEA_ORACLE_STAGE_ROOT"}
+    digests = set()
+    for seed in ("0", "12345"):
+        out = subprocess.run(
+            [sys.executable, "-c", prog],
+            env=dict(env, PYTHONHASHSEED=seed, PYTHONPATH=repo),
+            cwd=repo,
+            capture_output=True,
+            text=True,
+        )
+        assert out.returncode == 0, out.stderr
+        digests.add(out.stdout.strip())
+    assert len(digests) == 1
