@@ -31,7 +31,7 @@ from medea_spark.engine.partitioning import (
     SALT_ID,
     repartition_for_validation,
 )
-from medea_spark.kernel.batch import validate_batch
+from medea_spark.kernel.batch import offending_value_batch, validate_batch
 
 VIOLATION_STRUCT = T.StructType(
     [
@@ -86,41 +86,11 @@ def attach_verdict(df: DataFrame, verdict: Column) -> DataFrame:
     )
 
 
-def _offending_value_series(contents, pointers):
-    # No annotations: explicit returnType below (PEP 563 stringified
-    # hints break pandas_udf inference — CLAUDE.md trap).
-    import json as _json
-
-    from medea_spark.kernel.validator import offending_value_json
-
-    parsed: dict = {}  # batch-local parse cache (duplicate-heavy corpora)
-    out = []
-    for content, pointer in zip(contents.tolist(), pointers.tolist()):
-        if content is None:
-            out.append(None)
-            continue
-        if content in parsed:
-            value = parsed[content]
-        else:
-            try:
-                value = parsed[content] = _json.loads(content)
-            except (ValueError, TypeError, RecursionError):
-                value = parsed[content] = _SENTINEL_NOT_JSON
-        if value is _SENTINEL_NOT_JSON:
-            out.append(content[:256])
-        else:
-            out.append(offending_value_json(value, pointer))
-    return pd.Series(out, dtype="object")
-
-
-_SENTINEL_NOT_JSON = object()
-
-
 def _make_offending_value_udf():
     # Constructed per validate_table call (like make_validation_udf): a
     # module-level pandas_udf caches its JVM handle on first use and
     # breaks if the SparkSession is restarted within the same process.
-    return F.pandas_udf(_offending_value_series, T.StringType())
+    return F.pandas_udf(offending_value_batch, T.StringType())
 
 
 @dataclass

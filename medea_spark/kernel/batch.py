@@ -11,10 +11,16 @@ worker.
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 
 from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.kernel.validator import NOT_JSON, validate_document
+from medea_spark.kernel.validator import (
+    NOT_JSON,
+    offending_value_json,
+    validate_document,
+)
 
 
 def _missing(constraint: str) -> list[dict]:
@@ -89,3 +95,33 @@ def validate_batch(
             valids[i] = ok
             violations[i] = v
     return pd.DataFrame({"is_valid": valids, "violations": violations})
+
+
+_NOT_PARSED = object()
+
+
+def offending_value_batch(contents, pointers):
+    """The dev-mode ``offending_value`` UDF body: for each violation row,
+    the JSON chunk at its pointer (the first 256 characters of content
+    that does not parse; NULL content stays NULL).
+
+    No annotations: the engine passes an explicit returnType, and this
+    module's PEP 563 stringified hints would break pandas_udf inference."""
+    parsed: dict = {}  # batch-local parse cache (duplicate-heavy corpora)
+    out = []
+    for content, pointer in zip(contents.tolist(), pointers.tolist()):
+        if content is None:
+            out.append(None)
+            continue
+        if content in parsed:
+            value = parsed[content]
+        else:
+            try:
+                value = parsed[content] = json.loads(content)
+            except (ValueError, TypeError, RecursionError):
+                value = parsed[content] = _NOT_PARSED
+        if value is _NOT_PARSED:
+            out.append(content[:256])
+        else:
+            out.append(offending_value_json(value, pointer))
+    return pd.Series(out, dtype="object")

@@ -5,6 +5,11 @@ against a per-row ``validate_document`` call."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pandas as pd
 
 import medea_spark.kernel.batch as core
@@ -20,6 +25,7 @@ from medea_spark.kernel.validator import NOT_JSON, validate_document
 
 NUMBER = compile_schema_text("$schema $start\n    $type\n        $number\n")
 STRING = compile_schema_text("$schema $start\n    $type\n        $string\n")
+REPO = Path(core.__file__).resolve().parents[2]
 
 
 def _rows(frame: pd.DataFrame) -> list[tuple[bool, list[str]]]:
@@ -110,3 +116,45 @@ def test_single_schema_batch_memo(monkeypatch):
     got = _rows(make_validation_udf(STRING).func(contents))
     assert got == [_expected(STRING, c) for c in contents.tolist()]
     assert calls == [(id(STRING), '{"a": 1}'), (id(STRING), "[]")]
+
+
+_UNPICKLE = """
+import pickle, sys
+pickle.loads(sys.stdin.buffer.read())
+print(" ".join(sorted(m for m in sys.modules if m.startswith("medea_spark"))))
+"""
+
+
+def _worker_pythonpath() -> str:
+    """What a local Python worker searches: pyspark's own zips under
+    ``$SPARK_HOME/python/lib`` (when present), then the repo root."""
+    spark_home = os.environ.get("SPARK_HOME")
+    zips = sorted(Path(spark_home, "python", "lib").glob("*.zip")) if spark_home else []
+    return os.pathsep.join([*map(str, zips), str(REPO)])
+
+
+def test_kernel_udf_closures_import_only_the_kernel():
+    """A worker imports whatever module a UDF closure names; the engine
+    package would drag the pyspark.sql DataFrame stack into every worker,
+    and the kernel package installs the worker-side zipimport fix."""
+    from pyspark import cloudpickle
+
+    from medea_spark.engine.validate import _make_offending_value_udf
+
+    udfs = {
+        "single": make_validation_udf(NUMBER),
+        "dispatch": make_dispatch_validation_udf({"n": NUMBER}),
+        "versioned": make_versioned_validation_udf({1: NUMBER}),
+        "offending_value": _make_offending_value_udf(),
+    }
+    for name, udf in udfs.items():
+        out = subprocess.run(
+            [sys.executable, "-c", _UNPICKLE],
+            input=cloudpickle.dumps(udf.func),
+            capture_output=True,
+            env={**os.environ, "PYTHONPATH": _worker_pythonpath()},
+            check=True,
+        )
+        loaded = out.stdout.decode().split()
+        assert "medea_spark.kernel" in loaded, name
+        assert not [m for m in loaded if m.startswith("medea_spark.engine")], (name, loaded)

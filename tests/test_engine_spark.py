@@ -820,3 +820,36 @@ def test_merge_upsert_semantics(spark):
         merge_upsert(base, bad_cols, ["k"])
     with _pytest.raises(ValueError, match="at least one key"):
         merge_upsert(base, upd, [])
+
+
+def test_worker_tasks_do_not_reread_unchanged_zips(spark):
+    """Python workers import pyspark from ``pyspark.zip`` and call
+    ``importlib.invalidate_caches()`` per task; once a UDF closure has
+    imported the kernel package, an unchanged archive is not re-read."""
+    import pandas as pd
+
+    from medea_spark.kernel.batch import validate_batch
+
+    def reads(ids):
+        import importlib
+        import sys
+        import zipimport
+
+        _ = validate_batch  # the closure names a kernel function
+        # the first call after the kernel import stamps each archive
+        importlib.invalidate_caches()
+        real, n = zipimport._read_directory, []
+        zipimport._read_directory = lambda archive: n.append(archive) or real(archive)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        zips = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        return pd.DataFrame({"reads": [len(n)] * len(ids), "zips": [zips] * len(ids)})
+
+    udf = F.pandas_udf(reads, "reads long, zips long")
+    rows = spark.range(0, 8, numPartitions=4).select(udf("id").alias("r")).select("r.*").collect()
+    assert {r.reads for r in rows} == {0}
+    assert min(r.zips for r in rows) > 0  # the workers do hold zip importers
