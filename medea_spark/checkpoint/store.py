@@ -92,9 +92,10 @@ def _schema_fingerprint(graph: SchemaGraph) -> str:
 
 
 class CheckpointStore:
-    """Parquet-backed checkpoint table (Iceberg-ready: swap the two
-    read/append methods for ``spark.read.format('iceberg')`` /
-    ``df.writeTo(tbl).append()`` — the schema and keying are identical)."""
+    """Parquet-backed checkpoint table with one reader (``read``) and
+    one writer (``append_rows``).  Iceberg-ready: swap the two for
+    ``spark.read.format('iceberg')`` / a catalog append — the schema and
+    keying are identical."""
 
     def __init__(self, spark: SparkSession, location: str) -> None:
         self.spark = spark
@@ -110,9 +111,6 @@ class CheckpointStore:
         # Python-worker task per core.
         return self.spark.createDataFrame([], CHECKPOINT_SCHEMA).limit(0)
 
-    def append(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self._ckpt_path)
-
     def append_rows(self, rows: list[tuple]) -> None:
         """Commit checkpoint rows (``CHECKPOINT_SCHEMA`` minus
         ``committed_at``, which is stamped here) from the driver.
@@ -122,37 +120,25 @@ class CheckpointStore:
         file with pyarrow instead of scheduling a Spark job per commit
         (task launch + commit protocol for a few-KB payload).  The
         Iceberg swap-in point is unchanged: a catalog commit is
-        likewise a driver-side metadata write.  Types mirror
-        CHECKPOINT_SCHEMA exactly (int32 part_id/wave) so ``read()``'s
-        explicit schema accepts files from either writer."""
+        likewise a driver-side metadata write.  The Arrow schema is
+        derived from CHECKPOINT_SCHEMA (int32 part_id/wave, tz-aware
+        UTC ``committed_at``), so ``read()``'s explicit schema accepts
+        every commit file."""
         import os
         import uuid as _uuid
         from datetime import datetime, timezone
 
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
+        schema = to_arrow_schema(CHECKPOINT_SCHEMA)
         now = datetime.now(timezone.utc)
-        cols = list(zip(*rows)) if rows else [[] for _ in range(11)]
-        table = pa.table(
-            {
-                "run_id": pa.array(cols[0], pa.string()),
-                "part_id": pa.array(cols[1], pa.int32()),
-                "status": pa.array(cols[2], pa.string()),
-                "rows": pa.array(cols[3], pa.int64()),
-                "valid_rows": pa.array(cols[4], pa.int64()),
-                "invalid_rows": pa.array(cols[5], pa.int64()),
-                "violation_count": pa.array(cols[6], pa.int64()),
-                "wall_ms": pa.array(cols[7], pa.int64()),
-                "wave": pa.array(cols[8], pa.int32()),
-                "schema_fingerprint": pa.array(cols[9], pa.string()),
-                "input_fingerprint": pa.array(cols[10], pa.string()),
-                # tz-aware (isAdjustedToUTC) so read()'s TimestampType
-                # schema accepts the column without NTZ coercion
-                "committed_at": pa.array(
-                    [now] * len(rows), pa.timestamp("us", tz="UTC")
-                ),
-            }
+        stamped = [(*row, now) for row in rows]
+        cols = list(zip(*stamped)) or [()] * len(schema)
+        table = pa.Table.from_arrays(
+            [pa.array(col, field.type) for col, field in zip(cols, schema)],
+            schema=schema,
         )
         os.makedirs(self._ckpt_path, exist_ok=True)
         pq.write_table(

@@ -36,14 +36,29 @@ def lang_size_histogram(
 
 
 def _cells(current: DataFrame, baseline: DataFrame, on: list[str]) -> DataFrame:
-    """The shared cell universe of two histograms: (on..., o, b), a
-    cell absent on one side counting 0 there (full-outer join)."""
+    """The shared cell universe of two histograms: (o, b, n_cur,
+    n_base), a cell absent on one side counting 0 there (full-outer
+    join), with each side's total on every cell.
+
+    The totals are whole-frame window sums over the joined cells (as in
+    ``ks_statistic``): a separate totals aggregate joined back would
+    evaluate the histogram chain twice.  The window has one partition,
+    but it holds only the histogram's cells."""
     cur = current.groupBy(*on).agg(F.sum("cnt").alias("o"))
     base = baseline.groupBy(*on).agg(F.sum("cnt").alias("b"))
-    return cur.join(base, on=on, how="full_outer").select(
-        *on,
-        F.coalesce(F.col("o"), F.lit(0)).alias("o"),
-        F.coalesce(F.col("b"), F.lit(0)).alias("b"),
+    whole = Window.partitionBy()
+    return (
+        cur.join(base, on=on, how="full_outer")
+        .select(
+            F.coalesce(F.col("o"), F.lit(0)).alias("o"),
+            F.coalesce(F.col("b"), F.lit(0)).alias("b"),
+        )
+        .select(
+            "o",
+            "b",
+            F.sum("o").over(whole).alias("n_cur"),
+            F.sum("b").over(whole).alias("n_base"),
+        )
     )
 
 
@@ -56,27 +71,12 @@ def chi_square_statistic(
     total; cells absent on one side get count 0 (full-outer join).
     Cells with zero baseline get a 0.5 pseudo-count so novel categories
     register as drift instead of dividing by zero.
-
-    The totals are whole-frame window sums over the joined cells (as in
-    ``ks_statistic``): a separate totals aggregate broadcast back through
-    a cross join would evaluate the histogram chain twice.  The window
-    has one partition, but it holds only the histogram's cells.
     """
-    whole = Window.partitionBy()
-    with_e = (
-        _cells(current, baseline, on or ["lang"])
-        .select(
-            "o",
-            "b",
-            F.sum("o").over(whole).alias("n_cur"),
-            F.sum("b").over(whole).alias("n_base"),
-        )
-        .withColumn(
-            "e",
-            F.when(
-                F.col("b") > 0, F.col("b") * F.col("n_cur") / F.col("n_base")
-            ).otherwise(F.lit(0.5)),
-        )
+    with_e = _cells(current, baseline, on or ["lang"]).withColumn(
+        "e",
+        F.when(
+            F.col("b") > 0, F.col("b") * F.col("n_cur") / F.col("n_base")
+        ).otherwise(F.lit(0.5)),
     )
     return with_e.agg(
         F.sum(((F.col("o") - F.col("e")) ** 2) / F.col("e")).alias("statistic"),
@@ -169,12 +169,10 @@ def psi_statistic(
     or vanished categories contribute large-but-finite terms.  Pure
     relational + ``ln`` — IEEE-portable, engine-differential-testable.
     """
-    joined = _cells(current, baseline, on or ["lang"])
-    totals = joined.agg(F.sum("o").alias("n_cur"), F.sum("b").alias("n_base"))
     # An empty side yields a NULL psi (matching ks_statistic), not an
     # ANSI DIVIDE_BY_ZERO job failure.  The gate must sit outside the
     # floor: greatest() skips NULLs, so greatest(NULL, eps) is eps.
-    with_p = joined.crossJoin(F.broadcast(totals)).select(
+    with_p = _cells(current, baseline, on or ["lang"]).select(
         F.when(
             F.col("n_cur") != 0,
             F.greatest(F.col("o") / F.col("n_cur"), F.lit(epsilon)),

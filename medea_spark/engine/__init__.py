@@ -31,7 +31,6 @@ from medea_spark.engine.temporal import (
     NO_ACTIVE_SCHEMA,
     SchemaVersion,
     assign_schema_version,
-    make_versioned_validation_udf,
     validate_table_versioned,
 )
 from medea_spark.engine.validate import (
@@ -49,7 +48,6 @@ __all__ = [
     "validate_table_dispatched",
     "SchemaVersion",
     "assign_schema_version",
-    "make_versioned_validation_udf",
     "validate_table_versioned",
     "ANNOTATED_RESULT",
     "ANNOTATION_NODE",

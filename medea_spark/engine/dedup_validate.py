@@ -46,7 +46,6 @@ def validate_table_deduped(
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     num_partitions: int | None = None,
     skewed_keys: list[str] | None = None,
-    with_sha256: bool = True,
 ) -> ValidationRun:
     """validate_table semantics, one kernel call per distinct content."""
     spark = df.sparkSession
@@ -68,4 +67,4 @@ def validate_table_deduped(
     validated = with_partition_columns(
         validated, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
     )
-    return _validation_run(validated, content_col, key_cols, with_sha256)
+    return _validation_run(validated, content_col, key_cols)

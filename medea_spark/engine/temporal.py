@@ -11,8 +11,9 @@ boundary literals — whole-stage codegen, zero join, zero shuffle, zero
 row blowup).  The generic |facts| × |versions| expand-then-argmax
 as-of join shape is never materialized.
 
-Validation then resolves each row's version to its compiled graph and
-hands the Arrow batch to the shared kernel batch core
+Validation then runs the keyed kernel UDF of ``engine/dispatch.py``
+over (content, version): each row resolves to its version's compiled
+graph, and the Arrow batch goes to the shared kernel batch core
 (:func:`~medea_spark.kernel.batch.validate_batch`).
 
 All boundary arithmetic is in integral microseconds (``unix_micros`` /
@@ -24,13 +25,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.engine.validate import attach_verdict, kernel_udf
-from medea_spark.kernel.batch import validate_batch
+from medea_spark.engine.dispatch import make_dispatch_validation_udf
+from medea_spark.engine.validate import attach_verdict
 
 
 @dataclass(frozen=True)
@@ -103,24 +103,6 @@ def assign_schema_version(
 NO_ACTIVE_SCHEMA = "NO_ACTIVE_SCHEMA"
 
 
-def make_versioned_validation_udf(graphs: dict[int, SchemaGraph]):
-    """Arrow-vectorized kernel UDF over (content, version): each row
-    validates against its version's compiled graph.  Rows with a NULL
-    version (no schema active at their event time) fail with the
-    dedicated NO_ACTIVE_SCHEMA constraint — deterministic and
-    queryable, never a silent guess."""
-
-    def _validate_batch(contents: pd.Series, versions: pd.Series) -> pd.DataFrame:
-        # NULL versions arrive as NaN (float column), which no int key matches
-        get = graphs.get
-        return validate_batch(
-            contents.tolist(),
-            [get(v, NO_ACTIVE_SCHEMA) for v in versions.tolist()],
-        )
-
-    return kernel_udf(_validate_batch)
-
-
 def validate_table_versioned(
     df: DataFrame,
     versions: list[SchemaVersion],
@@ -130,9 +112,13 @@ def validate_table_versioned(
     """Input rows plus ``schema_version`` (int, NULL = none active),
     ``is_valid``, ``violations`` — each row judged by the schema active
     at its own event time.  Plan shape: scan → codegen version
-    assignment → one Arrow kernel stage.  No shuffle, no join."""
-    graphs = {v.version: v.graph for v in versions}
-    udf = make_versioned_validation_udf(graphs)
+    assignment → one Arrow kernel stage.  No shuffle, no join.  Rows
+    with a NULL version (no schema active at their event time) fail
+    with the dedicated NO_ACTIVE_SCHEMA constraint — deterministic and
+    queryable, never a silent guess."""
+    udf = make_dispatch_validation_udf(
+        {v.version: v.graph for v in versions}, NO_ACTIVE_SCHEMA
+    )
     out = df.withColumn(
         "schema_version", assign_schema_version(F.col(ts_col), versions)
     )

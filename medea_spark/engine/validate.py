@@ -30,6 +30,7 @@ from medea_spark.engine.partitioning import (
     PART_ID,
     SALT_ID,
     repartition_for_validation,
+    with_partition_columns,
 )
 from medea_spark.kernel.batch import offending_value_batch, validate_batch
 
@@ -109,8 +110,6 @@ def validate_table(
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     num_partitions: int | None = None,
     skewed_keys: list[str] | None = None,
-    collect_all: bool = False,
-    with_sha256: bool = True,
     repartition: bool = False,
     observe: "Observation | None" = None,
     with_offending_values: bool = False,
@@ -139,17 +138,13 @@ def validate_table(
             df, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
         )
     else:
-        from medea_spark.engine.partitioning import with_partition_columns
-
         base = with_partition_columns(
             df, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
         )
 
-    validated = attach_verdict(
-        base, make_validation_udf(graph, collect_all)(F.col(content_col))
-    )
+    validated = attach_verdict(base, make_validation_udf(graph)(F.col(content_col)))
     return _validation_run(
-        validated, content_col, key_cols, with_sha256, observe, with_offending_values
+        validated, content_col, key_cols, observe, with_offending_values
     )
 
 
@@ -157,17 +152,16 @@ def _validation_run(
     validated: DataFrame,
     content_col: str,
     key_cols: tuple[str, ...],
-    with_sha256: bool,
     observe: "Observation | None" = None,
     with_offending_values: bool = False,
 ) -> ValidationRun:
     """The three output relations from a table that already carries the
     verdict and the partition columns."""
-    if with_sha256:
-        # Per-row identity invariant vs the fixture corpus (BASELINE.json
-        # input_hint): sha256 of the exact content bytes, computed JVM-side.
-        validated = validated.withColumn("content_sha256", F.sha2(F.col(content_col), 256))
-    validated = validated.withColumn("n_violations", F.size("violations"))
+    # Per-row identity invariant vs the fixture corpus (BASELINE.json
+    # input_hint): sha256 of the exact content bytes, computed JVM-side.
+    validated = validated.withColumn(
+        "content_sha256", F.sha2(F.col(content_col), 256)
+    ).withColumn("n_violations", F.size("violations"))
     if observe is not None:
         # Lineage/metrics hook (C15): after any action on `validated`,
         # observe.get returns {rows, valid_rows, violation_count} free of

@@ -5,7 +5,6 @@ from medea_spark.streaming.validate_stream import (
     REPO_STATE_SCHEMA,
     dedup_stream,
     incremental_dedup_stream,
-    dispatch_stream,
     file_stream_source,
     repo_violation_state,
     session_counts,
@@ -18,7 +17,6 @@ __all__ = [
     "REPO_STATE_SCHEMA",
     "dedup_stream",
     "incremental_dedup_stream",
-    "dispatch_stream",
     "file_stream_source",
     "repo_violation_state",
     "session_counts",

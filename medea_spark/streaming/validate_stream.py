@@ -10,6 +10,9 @@ the ones we add deliberately:
   (``applyInPandasWithState``): per-repo running totals that emit a
   row per micro-batch and expire idle repos by processing-time timeout.
 
+Per-row schema dispatch on a stream needs no wrapper here:
+``engine.validate_table_dispatched`` takes a streaming frame as is.
+
 At scale the source is an Iceberg/file stream (``maxFilesPerTrigger``
 bounds micro-batch size); state is per-repo (bounded by the repo
 universe, not row count).
@@ -37,24 +40,6 @@ def validate_stream(
     """Attach the kernel verdict to a streaming DataFrame (stateless —
     identical semantics to the batch path)."""
     return attach_verdict(stream_df, make_validation_udf(graph)(F.col(content_col)))
-
-
-def dispatch_stream(
-    stream_df: DataFrame,
-    schemas: dict[str, SchemaGraph],
-    key_col: str,
-    content_col: str = "content",
-    default_key: str | None = None,
-) -> DataFrame:
-    """Per-row schema dispatch on a stream (see engine/dispatch.py):
-    the dispatch kernel UDF is stateless, so it drops into a streaming
-    plan unchanged — heterogeneous file families validate against
-    their own schemas as they arrive, with identical semantics to the
-    batch path (parity-tested)."""
-    from medea_spark.engine.dispatch import make_dispatch_validation_udf
-
-    udf = make_dispatch_validation_udf(schemas, default_key)
-    return attach_verdict(stream_df, udf(F.col(content_col), F.col(key_col)))
 
 
 def windowed_violation_counts(

@@ -1,7 +1,9 @@
-"""The kernel batch core without Spark: the single-schema, dispatch and
-version-keyed UDFs all resolve rows to graphs and hand the batch to
-``validate_batch``.  Each case runs inside one batch and is checked
-against a per-row ``validate_document`` call."""
+"""The kernel batch core without Spark: the single-schema and keyed
+UDFs resolve rows to graphs and hand the batch to ``validate_batch``.
+The keyed UDF serves both dispatch (a missing-schema constraint or a
+default graph for unmatched keys) and version-keyed validation
+(``NO_ACTIVE_SCHEMA`` for NULL versions).  Each case runs inside one
+batch and is checked against a per-row ``validate_document`` call."""
 
 from __future__ import annotations
 
@@ -19,7 +21,6 @@ from medea_spark.engine import (
     NO_SCHEMA_FOR_KEY,
     make_dispatch_validation_udf,
     make_validation_udf,
-    make_versioned_validation_udf,
 )
 from medea_spark.kernel.validator import NOT_JSON, validate_document
 
@@ -73,7 +74,9 @@ def test_dispatch_batch_matches_per_row_kernel(monkeypatch):
     keys = pd.Series([k for k, _ in rows], dtype="object")
     contents = pd.Series([c for _, c in rows], dtype="object")
 
-    got = _rows(make_dispatch_validation_udf(graphs).func(contents, keys))
+    got = _rows(
+        make_dispatch_validation_udf(graphs, NO_SCHEMA_FOR_KEY).func(contents, keys)
+    )
     want = [
         (False, [NO_SCHEMA_FOR_KEY]) if k not in graphs else _expected(graphs[k], c)
         for k, c in rows
@@ -84,10 +87,8 @@ def test_dispatch_batch_matches_per_row_kernel(monkeypatch):
     assert calls.count((id(NUMBER), "5")) == 1
     assert calls.count((id(STRING), "5")) == 1
 
-    # default_key: unregistered and NULL keys fall back to its graph
-    fallback = _rows(
-        make_dispatch_validation_udf(graphs, default_key="s").func(contents, keys)
-    )
+    # a graph fallback: unregistered and NULL keys validate against it
+    fallback = _rows(make_dispatch_validation_udf(graphs, STRING).func(contents, keys))
     assert fallback[5] == fallback[6] == _expected(STRING, "5")
     assert fallback[8] == (False, [NOT_JSON])
     assert [r for i, r in enumerate(fallback) if i not in (5, 6, 8)] == [
@@ -100,7 +101,9 @@ def test_versioned_batch_null_version():
     # a nullable int column reaches pandas as float64 with NaN for NULL
     versions = pd.Series([1.0, 2.0, None, 1.0, 2.0], dtype="float64")
     contents = pd.Series(["5", "5", "5", None, '"x"'], dtype="object")
-    got = _rows(make_versioned_validation_udf(graphs).func(contents, versions))
+    got = _rows(
+        make_dispatch_validation_udf(graphs, NO_ACTIVE_SCHEMA).func(contents, versions)
+    )
     assert got == [
         _expected(NUMBER, "5"),
         _expected(STRING, "5"),
@@ -108,6 +111,9 @@ def test_versioned_batch_null_version():
         (False, [NOT_JSON]),
         _expected(STRING, '"x"'),
     ]
+    # a graph fallback judges the NULL-version row instead
+    with_graph = make_dispatch_validation_udf(graphs, NUMBER).func(contents, versions)
+    assert _rows(with_graph)[2] == _expected(NUMBER, "5")
 
 
 def test_single_schema_batch_memo(monkeypatch):
@@ -143,8 +149,8 @@ def test_kernel_udf_closures_import_only_the_kernel():
 
     udfs = {
         "single": make_validation_udf(NUMBER),
-        "dispatch": make_dispatch_validation_udf({"n": NUMBER}),
-        "versioned": make_versioned_validation_udf({1: NUMBER}),
+        "dispatch": make_dispatch_validation_udf({"n": NUMBER}, NO_SCHEMA_FOR_KEY),
+        "versioned": make_dispatch_validation_udf({1: NUMBER}, NO_ACTIVE_SCHEMA),
         "offending_value": _make_offending_value_udf(),
     }
     for name, udf in udfs.items():

@@ -48,10 +48,13 @@ def test_partial_resume_processes_remainder(spark, store):
             (F.col("run_id") == "tmp") & (F.col("wave") == 0)
         ).collect()
     ]
-    crashed = store.read().filter(
-        (F.col("run_id") == "tmp") & (F.col("wave") == 0)
-    ).withColumn("run_id", F.lit("r2"))
-    store.append(crashed)
+    crashed = [
+        ("r2", *tuple(r)[1:11])  # committed_at is stamped again on commit
+        for r in store.read()
+        .filter((F.col("run_id") == "tmp") & (F.col("wave") == 0))
+        .collect()
+    ]
+    store.append_rows(crashed)
 
     resumed = run_validation_with_checkpoints(
         spark, df, graph, store, run_id="r2", num_partitions=8, n_waves=4
@@ -72,6 +75,53 @@ def test_partial_resume_processes_remainder(spark, store):
         .collect()[0][0]
     )
     assert total == full_total == 800
+
+
+def test_commit_files_of_both_layouts_read_back(spark, store):
+    """A checkpoint directory holding a commit file in the earlier
+    hand-typed Arrow layout (nullable columns) next to one that
+    ``append_rows`` writes from the schema derived from
+    CHECKPOINT_SCHEMA (not-null columns) reads back whole."""
+    import os
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamp = datetime(2024, 5, 1, 12, 0, tzinfo=timezone.utc)
+    old = pa.table(
+        {
+            "run_id": pa.array(["old"], pa.string()),
+            "part_id": pa.array([3], pa.int32()),
+            "status": pa.array(["done"], pa.string()),
+            "rows": pa.array([10], pa.int64()),
+            "valid_rows": pa.array([8], pa.int64()),
+            "invalid_rows": pa.array([2], pa.int64()),
+            "violation_count": pa.array([4], pa.int64()),
+            "wall_ms": pa.array([11], pa.int64()),
+            "wave": pa.array([1], pa.int32()),
+            "schema_fingerprint": pa.array(["fp"], pa.string()),
+            "input_fingerprint": pa.array(["in"], pa.string()),
+            "committed_at": pa.array([stamp], pa.timestamp("us", tz="UTC")),
+        }
+    )
+    os.makedirs(store._ckpt_path)
+    pq.write_table(old, f"{store._ckpt_path}/commit-old.parquet")
+    store.append_rows([("new", 5, "done", 7, 7, 0, 0, 12, 0, "fp", "")])
+
+    new_file = [f for f in os.listdir(store._ckpt_path) if f != "commit-old.parquet"]
+    new_schema = pq.read_schema(f"{store._ckpt_path}/{new_file[0]}")
+    assert new_schema.types == old.schema.types
+    assert not any(f.nullable for f in new_schema)
+    assert all(f.nullable for f in old.schema)
+
+    got = {r["run_id"]: r for r in store.read().collect()}
+    assert sorted(got) == ["new", "old"]
+    assert tuple(got["old"])[:11] == ("old", 3, "done", 10, 8, 2, 4, 11, 1, "fp", "in")
+    assert got["old"]["committed_at"].timestamp() == stamp.timestamp()
+    assert tuple(got["new"])[:11] == ("new", 5, "done", 7, 7, 0, 0, 12, 0, "fp", "")
+    assert got["new"]["committed_at"] is not None
+    assert store.done_part_ids("old", "fp", "in").collect()[0]["part_id"] == 3
 
 
 def test_lineage_fields_present(spark, store):

@@ -884,11 +884,19 @@ def test_check_job_ceilings(spark, keyed_scan):
     """Each table check stays at its job count (under AQE every query
     stage is a job); the driver-built relations plan as LocalRelation
     and are read without any job."""
-    from medea_spark.checks import accepted_values, not_null, run_check_suite, unique
+    from medea_spark.checks import (
+        accepted_values,
+        not_null,
+        psi_statistic,
+        run_check_suite,
+        unique,
+    )
 
     df = keyed_scan
     keys = ["repo", "path", "commit"]
     sized = F.length("content").alias("size")
+    current = lang_size_histogram(df.filter(F.col("lang") != "toml").select("lang", sized), "lang", "size")
+    baseline = lang_size_histogram(df.select("lang", sized), "lang", "size")
     dim = dim_repos(spark, n_repos=20, orphan_every=7)
     rules = [not_null("content"), accepted_values("lang", ["json", "yaml"]), unique(keys)]
     checks = {
@@ -896,12 +904,12 @@ def test_check_job_ceilings(spark, keyed_scan):
         "uniqueness_report_salted": (lambda: uniqueness_report(df, keys, salted=True).first(), 4),
         "referential_report": (lambda: referential_report(df, dim, "repo").collect(), 3),
         "drift_decision": (
-            lambda: drift_decision(
-                lang_size_histogram(df.filter(F.col("lang") != "toml").select("lang", sized), "lang", "size"),
-                lang_size_histogram(df.select("lang", sized), "lang", "size"),
-                on=["lang", "size_bucket"],
-            ),
+            lambda: drift_decision(current, baseline, on=["lang", "size_bucket"]),
             5,
+        ),
+        "psi_statistic": (
+            lambda: psi_statistic(current, baseline, on=["lang", "size_bucket"]).collect(),
+            4,
         ),
         "run_check_suite": (lambda: run_check_suite(df, rules).collect(), 3),
     }

@@ -1113,7 +1113,8 @@ def test_connected_components_self_loop_only_nodes(spark):
 
 
 def test_connected_components_log_diameter_bound(spark):
-    """A 60-node path has diameter 59: pointer-jumping propagation
+    """A 60-node path whose ids increase along it has diameter 59:
+    pointer-jumping propagation
     (round-6 optimization: label ← min(label, label(label)) each round)
     closes it within 8 rounds — the pre-jump diameter-bound loop could
     not — and still trips the non-convergence guard when the budget is
@@ -1138,21 +1139,8 @@ def test_connected_components_log_diameter_bound(spark):
     assert got_star == {i: 0 for i in range(n + 1)}
 
 
-def test_connected_components_star_random_graph_vs_union_find(spark):
-    """The star algorithm against the same union-find ground truth as
-    the propagation differential — seeded random graph plus a
-    long-chain tail grafted onto one component."""
-    import random
-
-    from medea_spark.pipeline import connected_components
-
-    rng = random.Random(777)
-    nodes = list(range(150))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(110)]
-    edges += [(1000 + i, 1001 + i) for i in range(40)]  # chain tail
-    edges.append((edges[0][0], 1000))                   # graft chain on
-    edges = [(a, b) for a, b in edges if a != b]
-
+def _union_find_components(edges: list) -> dict:
+    """Ground truth: node → smallest node id of its component."""
     parent = {}
 
     def find(x):
@@ -1176,12 +1164,66 @@ def test_connected_components_star_random_graph_vs_union_find(spark):
         for n_ in members:
             want[n_] = m
 
-    df = spark.createDataFrame(edges, ["a", "b"])
-    got = {
-        r.node: r.component
-        for r in connected_components(df, algorithm="star").collect()
-    }
-    assert got == want
+    return want
+
+
+def test_connected_components_star_random_graph_vs_union_find(spark):
+    """The star algorithm against the same union-find ground truth as
+    the propagation differential — a seeded random graph plus a
+    long-chain tail grafted onto one component, and a path whose ids
+    are shuffled along it (the shape that takes pointer-jumping
+    propagation O(diameter) rounds, not O(log diameter))."""
+    import random
+
+    from medea_spark.pipeline import connected_components
+
+    rng = random.Random(777)
+    nodes = list(range(150))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(110)]
+    edges += [(1000 + i, 1001 + i) for i in range(40)]  # chain tail
+    edges.append((edges[0][0], 1000))                   # graft chain on
+    edges = [(a, b) for a, b in edges if a != b]
+    ids = list(range(200))
+    rng.shuffle(ids)
+    shuffled_path = list(zip(ids, ids[1:]))
+
+    for graph in (edges, shuffled_path):
+        df = spark.createDataFrame(graph, ["a", "b"])
+        got = {
+            r.node: r.component
+            for r in connected_components(df, algorithm="star").collect()
+        }
+        assert got == _union_find_components(graph)
+
+
+def test_connected_components_round_estimate_stays_bounded(spark, monkeypatch):
+    """Each propagation round checkpoints its labels.  The checkpoint
+    must not carry the Catalyst size estimate of the round's plan: the
+    pointer-jump self-join squares it, so carried forward its digit
+    count doubles every round, and the BigInt arithmetic alone makes
+    rounds 18-22 of this path take seconds to minutes.  The shuffled-id
+    path needs more than 20 rounds, so the guard raises."""
+    import random
+
+    from medea_spark.pipeline import connected_components
+
+    ids = list(range(60))
+    random.Random(1).shuffle(ids)
+    df = spark.createDataFrame(list(zip(ids, ids[1:])), ["a", "b"])
+    digits: list[int] = []
+    checkpoint = type(df).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        size = self._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        digits.append(len(str(size)))
+        # fail on the first runaway round, before the estimate gets slow
+        assert digits[-1] < 100, digits
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", recording)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=20)
+    assert len(digits) == 21  # the initial labels and 20 rounds
 
 
 def test_duplicate_clusters_keeper(spark):

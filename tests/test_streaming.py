@@ -64,12 +64,11 @@ def test_stream_verdicts_match_batch(spark, stream_dir):
 
 def test_dispatch_stream_matches_batch(spark, stream_dir):
     """Per-row schema dispatch on a stream: availableNow replay of the
-    corpus through dispatch_stream (keyed by lang) must equal the
-    batch validate_table_dispatched verdicts row-for-row — including
+    corpus through validate_table_dispatched (keyed by lang) must equal
+    the batch validate_table_dispatched verdicts row-for-row — including
     NO_SCHEMA_FOR_KEY rows for unregistered languages."""
     from medea_spark.compiler import compile_schema_text
     from medea_spark.engine import validate_table_dispatched
-    from medea_spark.streaming import dispatch_stream
 
     # two registered families: python rows validate against the corpus
     # schema, json rows against the any-schema; everything else
@@ -81,7 +80,7 @@ def test_dispatch_stream_matches_batch(spark, stream_dir):
     schema = _schema_with_ts()
     src = file_stream_source(spark, stream_dir, schema, max_files_per_trigger=3)
     q = (
-        dispatch_stream(src, schemas, key_col="lang")
+        validate_table_dispatched(src, schemas, key_col="lang")
         .select(
             "repo", "path", "commit", "lang", "is_valid",
             F.get(F.col("violations"), 0)
