@@ -81,10 +81,17 @@ _SKEW_WORKER = r"""
 import json, sys, time, urllib.request
 sys.path.insert(0, "__REPO__")
 from medea_spark.corpus import corpus_schema_graph, generate_corpus
-from medea_spark.engine import validate_table
+from medea_spark.engine import PART_ID, SALT_ID, validate_table, with_partition_columns
 from medea_spark.engine.session import get_spark
 
 cpus = int(sys.argv[1]); rows = int(sys.argv[2]); path = sys.argv[3]
+
+def clustered(df, n, skewed=None):
+    # The salted (part_id, salt_id) exchange of a checkpointed run's
+    # stage write, placed in front of the kernel so its tasks inherit
+    # the exchange's balance (or, unsalted, its straggler).
+    return with_partition_columns(df, n, skewed_keys=skewed).repartition(
+        n, PART_ID, SALT_ID)
 # The Spark UI is normally off; the skew bench needs its REST API for
 # per-task runtime quantiles of the kernel stage.
 spark = get_spark(app_name=f"medea-skew-{rows}", cores=cpus,
@@ -134,15 +141,16 @@ corpus = spark.read.parquet(path)
 graph = corpus_schema_graph()
 
 # Warm the Arrow worker pool so neither variant is charged imports.
-validate_table(corpus.limit(50_000), graph, num_partitions=cpus,
-               repartition=True).summary.collect()
+validate_table(clustered(corpus.limit(50_000), cpus), graph,
+               num_partitions=cpus).summary.collect()
 
 out = {"cpus": cpus, "gen_sec": round(gen_sec, 1)}
 for name, skewed in (("salted", ["repo-mono"]), ("unsalted", None)):
     before = completed_stage_ids()
     t0 = time.monotonic()
-    run = validate_table(corpus, graph, num_partitions=max(2 * cpus, 32),
-                         skewed_keys=skewed, repartition=True)
+    parts = max(2 * cpus, 32)
+    run = validate_table(clustered(corpus, parts, skewed), graph,
+                         num_partitions=parts, skewed_keys=skewed)
     summary = run.summary.collect()
     wall = time.monotonic() - t0
     s = kernel_stage_summary(before)
@@ -186,8 +194,8 @@ Generated {datetime.now(timezone.utc).isoformat(timespec='seconds')} by
 `python BENCH/run_large.py --skew --rows {args.rows} --cpus {args.cpus}`
 (taskset-pinned local[{args.cpus}], unique-content corpus with
 `giant_share_pct=50` — one repo holds half of all rows).  Both variants
-run the same `validate_table(..., repartition=True)` plan; per-task
-executorRunTime quantiles of the kernel stage come from the Spark REST
+run `validate_table` behind the same salted `(part_id, salt_id)`
+exchange; per-task executorRunTime quantiles of the kernel stage come from the Spark REST
 API.
 
 | variant | wall | kernel tasks | task p50 | task p99 | task max | p99/p50 |
@@ -202,8 +210,7 @@ same rows over 4×num_partitions salt buckets and the straggler is
 bounded (p99 within a small factor of the median).  AQE cannot fix
 this — it rebalances joins, not map-stage UDF input — which is why the
 engine salts explicitly and deterministically (checkpoint resume still
-works).  Both variants pay the same repartition=True shuffle
-(~25 GB), which the DEFAULT validate path avoids entirely (content
+works).  Both variants pay the same salted exchange (~25 GB), which the DEFAULT validate path avoids entirely (content
 bytes never shuffle; part_id is a computed column) — so these walls
 measure the straggler effect, not the engine's headline throughput
 (see the scale-up table above for that).

@@ -12,7 +12,9 @@ Usage (north rule: spark-submit --py-files on a multi-executor cluster):
         --num-partitions 4096 --waves 64
 
 Resumable: re-submitting with the same --run-id anti-joins the
-checkpoint table and validates only unfinished partitions.
+checkpoint table and validates only unfinished partitions.  Every run
+stages its input once under <checkpoints>/stage (or --stage-location)
+and a resubmission reuses that committed stage.
 """
 
 from __future__ import annotations
@@ -32,13 +34,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--num-partitions", type=int, default=256)
     ap.add_argument("--waves", type=int, default=8)
     ap.add_argument("--skew-fraction", type=float, default=0.05)
-    ap.add_argument("--content-col", default="content")
     ap.add_argument(
         "--stage-location",
         default=None,
-        help="stage the part-id-assigned input here, partitioned by "
-        "part_id, so every wave scan prunes to its slice (recommended "
-        "when the input is not already clustered by repo-hash)",
+        help="where the run stages its part-id-assigned input, partitioned "
+        "by part_id, so every wave scan prunes to its slice "
+        "(default: <checkpoints>/stage)",
     )
     args = ap.parse_args(argv)
 

@@ -20,16 +20,19 @@ configured, parquet subdirectories otherwise (the sandbox path).
 
 from __future__ import annotations
 
+import hashlib
 import time
 import uuid
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.engine.partitioning import PART_ID, SALT_ID
+from medea_spark.compiler.analyzer import ANY_NODE, SchemaGraph
+from medea_spark.engine.partitioning import PART_ID, SALT_ID, with_partition_columns
 from medea_spark.engine.validate import ValidationRun, validate_table
 
 CHECKPOINT_SCHEMA = T.StructType(
@@ -63,8 +66,6 @@ def _schema_fingerprint(graph: SchemaGraph) -> str:
     PYTHONHASHSEED, so ``repr(dataclass)`` is NOT stable between two
     spark-submit invocations — exactly the cross-process resume case
     this fingerprint exists for)."""
-    import hashlib
-
     parts = []
     for name in sorted(graph):
         s = graph[name]
@@ -82,9 +83,12 @@ def _schema_fingerprint(graph: SchemaGraph) -> str:
                 s.additional_props,
                 s.additional_prop_schema,
                 s.string_vals,
-                s.any_in_types,
-                tuple(sorted(s.prim_types)),
-                s.custom_names,
+                # Three entries derived from types_as, kept so every
+                # fingerprint (and so every committed checkpoint) stays
+                # valid: any-type flag, primitive types, custom names.
+                ANY_NODE in s.types_as,
+                tuple(sorted({n[1] for n in s.types_as if n[0] == 1})),
+                tuple(n[2] for n in s.types_as if n[0] == 2),
                 tuple(sorted(s.string_val_set)),
             )
         )
@@ -190,77 +194,65 @@ def run_validation_with_checkpoints(
     per wave; re-invoking with the same ``run_id`` skips checkpointed
     partitions via anti-join and processes only the remainder.
 
-    Scan-cost contract: the wave filter is on ``part_id``.  When the
-    source is already clustered/partitioned by part_id (an Iceberg
-    table bucketed by repo-hash — the production layout), each wave
-    scan prunes to its slice.  On *unclustered* storage the filter is
-    on a computed column, so every wave re-scans the table (n_waves
-    full scans).  ``stage_location`` removes that footgun for arbitrary
-    inputs: one pass writes the part-id-assigned rows partitioned by
-    part_id, and all waves read the staged table with guaranteed
-    partition pruning (one full scan + one write total, amortized over
-    resume re-invocations too since the stage is reused per run_id)."""
+    Every run stages its input once: one pass assigns part ids and
+    writes the rows under ``stage_location`` (default
+    ``<store.location>/stage``) partitioned by part_id, and every wave
+    reads its slice of that stage with partition pruning at the source.
+    The stage is keyed by ``(run_id, input_fingerprint)`` and reused
+    once committed, so a resumed run reads exactly the input its stage
+    captured."""
     run_id = run_id or uuid.uuid4().hex[:12]
     fingerprint = _schema_fingerprint(graph)
+    if stage_location is None:
+        stage_location = f"{store.location}/stage"
 
-    # Assign part ids once; the filter below prunes checkpointed work
-    # *before* the expensive kernel stage runs.
-    from medea_spark.engine.partitioning import with_partition_columns
-
-    base = with_partition_columns(
-        df, num_partitions, skewed_keys=skewed_keys
-    )
-    if stage_location is not None:
-        # The stage is keyed by (run_id, input fingerprint): a rerun of
-        # the same run_id after the input moved must not reuse the
-        # stale staged rows (the lineage check already forces a full
-        # re-validation in that case — it has to see the new input).
-        import hashlib
-
-        if not input_fingerprint:
-            # Without a fingerprint the stage is keyed by run_id alone
-            # and done_part_ids skips the input-lineage filter — resuming
-            # the same run_id after the input changed would silently
-            # reuse stale staged rows AND skip checkpointed parts.
-            import warnings
-
-            warnings.warn(
-                "stage_location set without input_fingerprint: resuming this "
-                "run_id after the input changes will reuse stale staged rows. "
-                "Pass input_fingerprint (e.g. an Iceberg snapshot id) for "
-                "safe stage+resume.",
-                stacklevel=2,
-            )
-        stage_key = run_id
-        if input_fingerprint:
-            stage_key += "-" + hashlib.sha256(input_fingerprint.encode()).hexdigest()[:8]
-        stage_path = f"{stage_location.rstrip('/')}/run={stage_key}"
-        # Read back with the schema already known (partitionBy moves
-        # part_id last): no schema-inference job, first run or resume.
-        stage_schema = T.StructType(
-            [f for f in base.schema.fields if f.name != PART_ID]
-            + [T.StructField(PART_ID, T.IntegerType())]
+    base = with_partition_columns(df, num_partitions, skewed_keys=skewed_keys)
+    # The stage is keyed by (run_id, input fingerprint): a rerun of the
+    # same run_id after the input moved must not reuse the stale staged
+    # rows (the lineage check already forces a full re-validation in
+    # that case — it has to see the new input).
+    stage_key = run_id
+    if input_fingerprint:
+        stage_key += "-" + hashlib.sha256(input_fingerprint.encode()).hexdigest()[:8]
+    else:
+        # Without a fingerprint the stage is keyed by run_id alone and
+        # done_part_ids skips the input-lineage filter — resuming the
+        # same run_id after the input changed would silently reuse stale
+        # staged rows AND skip checkpointed parts.
+        warnings.warn(
+            "checkpointed run without input_fingerprint: resuming this "
+            "run_id after the input changes will reuse stale staged rows. "
+            "Pass input_fingerprint (e.g. an Iceberg snapshot id) for "
+            "safe stage+resume.",
+            stacklevel=2,
         )
-        # Only a _SUCCESS-committed stage is reusable on resume —
-        # a crashed stage write is rebuilt, never trusted.
-        if not _exists(spark, f"{stage_path}/_SUCCESS"):
-            # The content bytes shuffle exactly once for the whole run
-            # (not once per wave), and partitionBy files every row under
-            # its part_id=N directory, so each wave reads its pruned
-            # slice with no further exchange.  The exchange is sized to
-            # the write slots: more tasks than slots only add task
-            # launches and small files (on 4 cores, 32 write tasks took
-            # 2.19 s for the 23.7 MB that 4 wrote in 1.30 s).  SALT_ID is
-            # part of the exchange key so a skewed monorepo's part
-            # spreads over every write task instead of recreating the
-            # straggler the salting exists to prevent.  The directory
-            # layout does not depend on the exchange width, so a stage
-            # written at any width resumes the same way.
-            write_tasks = min(num_partitions, spark.sparkContext.defaultParallelism)
-            base.repartition(write_tasks, F.col(PART_ID), F.col(SALT_ID)).write.mode(
-                "overwrite"
-            ).partitionBy(PART_ID).parquet(stage_path)
-        base = spark.read.schema(stage_schema).parquet(stage_path)
+    stage_path = f"{stage_location.rstrip('/')}/run={stage_key}"
+    # Read back with the schema already known (partitionBy moves
+    # part_id last): no schema-inference job, first run or resume.
+    stage_schema = T.StructType(
+        [f for f in base.schema.fields if f.name != PART_ID]
+        + [T.StructField(PART_ID, T.IntegerType())]
+    )
+    # Only a _SUCCESS-committed stage is reusable on resume — a crashed
+    # stage write is rebuilt, never trusted.
+    if not _exists(spark, f"{stage_path}/_SUCCESS"):
+        # The content bytes shuffle exactly once for the whole run (not
+        # once per wave), and partitionBy files every row under its
+        # part_id=N directory, so each wave reads its pruned slice with
+        # no further exchange.  The exchange is sized to the write
+        # slots: more tasks than slots only add task launches and small
+        # files (on 4 cores, 32 write tasks took 2.19 s for the 23.7 MB
+        # that 4 wrote in 1.30 s).  SALT_ID is part of the exchange key
+        # so a skewed monorepo's part spreads over every write task
+        # instead of recreating the straggler the salting exists to
+        # prevent.  The directory layout does not depend on the
+        # exchange width, so a stage written at any width resumes the
+        # same way.
+        write_tasks = min(num_partitions, spark.sparkContext.defaultParallelism)
+        base.repartition(write_tasks, F.col(PART_ID), F.col(SALT_ID)).write.mode(
+            "overwrite"
+        ).partitionBy(PART_ID).parquet(stage_path)
+    base = spark.read.schema(stage_schema).parquet(stage_path)
 
     done = {
         r.part_id
@@ -281,18 +273,13 @@ def run_validation_with_checkpoints(
         if not wave_parts:
             continue
         t0 = time.monotonic()
+        # The filter is on the stored part_id column, so the scan prunes
+        # to the wave's directories, and the staged rows are already
+        # clustered by part_id: the wave plan has no exchange before
+        # the kernel.
         wave_df = base.filter(F.col(PART_ID).isin(wave_parts))
-        # Staged input is already physically clustered by part_id, so a
-        # salted repartition would re-shuffle the content bytes for
-        # nothing (the repo invariant is that they never shuffle on the
-        # default path).  Unstaged inputs keep the explicit exchange so
-        # per-wave output files land clustered by (part_id, salt_id).
         result: ValidationRun = validate_table(
-            wave_df,
-            graph,
-            num_partitions=num_partitions,
-            skewed_keys=skewed_keys,
-            repartition=stage_location is None,
+            wave_df, graph, num_partitions=num_partitions, skewed_keys=skewed_keys
         )
         out = f"{(output_location or store.location).rstrip('/')}/run={run_id}/wave={wave}"
         # One kernel pass per wave: the validated relation feeds three
@@ -305,8 +292,6 @@ def run_validation_with_checkpoints(
         # freed by the first job's tail instead of waiting for it, and
         # the cache's per-partition loading locks guarantee the kernel
         # still runs once per partition whichever job gets there first.
-        from concurrent.futures import ThreadPoolExecutor
-
         result.validated.persist()
         try:
             with ThreadPoolExecutor(max_workers=3) as pool:

@@ -72,9 +72,8 @@ def ident_to_node(ident: str | None) -> Node:
 class CompiledSchema:
     """Reference parity: Analysis.hs:90-101 CompiledSchema.
 
-    Extra precomputed fields (``any_in_types`` / ``prim_types`` /
-    ``custom_names`` / ``string_val_set``) are kernel fast paths — they
-    carry no additional semantics.
+    Extra precomputed fields (``string_val_set`` / ``required_keys``)
+    are kernel fast paths — they carry no additional semantics.
     """
 
     name: str
@@ -90,9 +89,6 @@ class CompiledSchema:
     additional_prop_schema: Node
     string_vals: tuple[str, ...]
     # kernel fast paths
-    any_in_types: bool = field(default=False)
-    prim_types: frozenset[int] = field(default_factory=frozenset)
-    custom_names: tuple[str, ...] = field(default=())
     string_val_set: frozenset[str] = field(default_factory=frozenset)
     required_keys: tuple[str, ...] = ()  # prop_order minus optionals
 
@@ -222,9 +218,6 @@ def _compile_schema(spec: SchemaSpec) -> CompiledSchema:
         additional_props=additional,
         additional_prop_schema=additional_schema,
         string_vals=spec.string_vals,
-        any_in_types=ANY_NODE in types_as,
-        prim_types=frozenset(n[1] for n in types_as if n[0] == 1),
-        custom_names=tuple(n[2] for n in types_as if n[0] == 2),
         string_val_set=frozenset(spec.string_vals),
         required_keys=tuple(k for k in prop_order if not props[k][1]),
     )

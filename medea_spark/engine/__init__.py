@@ -9,7 +9,6 @@ from medea_spark.engine.partitioning import (
     PART_ID,
     SALT_ID,
     detect_skewed_keys,
-    repartition_for_validation,
     with_partition_columns,
 )
 from medea_spark.engine.dedup_validate import validate_table_deduped
@@ -66,7 +65,6 @@ __all__ = [
     "write_partitioned",
     "write_table",
     "make_validation_udf",
-    "repartition_for_validation",
     "validate_table",
     "validate_table_deduped",
     "with_partition_columns",

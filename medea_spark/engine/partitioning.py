@@ -88,20 +88,3 @@ def with_partition_columns(
         salt = F.lit(0)
     return df.withColumn(PART_ID, part).withColumn(SALT_ID, salt.cast("int"))
 
-
-def repartition_for_validation(
-    df: DataFrame,
-    num_partitions: int,
-    key_col: str = "repo",
-    salt_col: str = "path",
-    skewed_keys: list[str] | None = None,
-    salt_buckets: int | None = None,
-) -> DataFrame:
-    """The single exchange of the validation pipeline: co-locate rows by
-    salted repo hash so the UDF stage is balanced and every downstream
-    per-partition aggregate (summaries, checkpoints) reuses this
-    partitioning without another shuffle."""
-    with_cols = with_partition_columns(
-        df, num_partitions, key_col, salt_col, skewed_keys, salt_buckets
-    )
-    return with_cols.repartition(num_partitions, F.col(PART_ID), F.col(SALT_ID))

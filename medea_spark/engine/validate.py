@@ -2,7 +2,7 @@
 
 Dataflow (one exchange total):
 
-    scan → [repartition by salted repo-hash] → pandas-UDF kernel
+    scan → part_id/salt_id columns (no exchange) → pandas-UDF kernel
          → per-partition summaries (map-side partial agg, no extra
            shuffle beyond the final tiny agg exchange)
          → violation explode (only invalid rows)
@@ -26,12 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from medea_spark.compiler.analyzer import SchemaGraph
-from medea_spark.engine.partitioning import (
-    PART_ID,
-    SALT_ID,
-    repartition_for_validation,
-    with_partition_columns,
-)
+from medea_spark.engine.partitioning import PART_ID, SALT_ID, with_partition_columns
 from medea_spark.kernel.batch import offending_value_batch, validate_batch
 
 VIOLATION_STRUCT = T.StructType(
@@ -110,37 +105,27 @@ def validate_table(
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     num_partitions: int | None = None,
     skewed_keys: list[str] | None = None,
-    repartition: bool = False,
     observe: "Observation | None" = None,
     with_offending_values: bool = False,
 ) -> ValidationRun:
     """Validate every row's ``content_col`` against the compiled graph.
 
-    ``repartition=False`` (the default, and the 100 TB answer): the
-    kernel is embarrassingly parallel and the source's scan splits are
-    already size-balanced (``spark.sql.files.maxPartitionBytes``), so
-    physically shuffling the content bytes to co-locate by repo would
-    cost more than the validation itself.  ``part_id`` is computed as a
-    *column* (pure repo-hash); the per-partition summary then shuffles
-    only the map-side-combined aggregate rows — kilobytes, not the
-    table.  A giant monorepo cannot straggle this plan because work is
-    split by bytes, not by repo.
-
-    ``repartition=True`` physically clusters rows by salted repo-hash —
-    use it when the *output* should be written clustered by part_id
-    (checkpoint/resume file locality, downstream repo-local joins).
-    Skew salting (deterministic path-hash) keeps the exchange balanced.
+    The content bytes never shuffle (the 100 TB answer): the kernel is
+    embarrassingly parallel and the source's scan splits are already
+    size-balanced (``spark.sql.files.maxPartitionBytes``), so physically
+    shuffling the content to co-locate by repo would cost more than the
+    validation itself.  ``part_id`` is computed as a *column* (pure
+    repo-hash); the per-partition summary then shuffles only the
+    map-side-combined aggregate rows — kilobytes, not the table.  A
+    giant monorepo cannot straggle this plan because work is split by
+    bytes, not by repo.  A checkpointed run clusters its input by
+    part_id once, in its stage (``checkpoint.store``).
     """
     if num_partitions is None:
         num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if repartition:
-        base = repartition_for_validation(
-            df, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
-        )
-    else:
-        base = with_partition_columns(
-            df, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
-        )
+    base = with_partition_columns(
+        df, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
+    )
 
     validated = attach_verdict(base, make_validation_udf(graph)(F.col(content_col)))
     return _validation_run(

@@ -44,27 +44,30 @@ def _norm_tokens(col: Column) -> Column:
     )
 
 
-def ngram_hashes_from_tokens(toks: Column, n: int = 8) -> Column:
-    """Distinct 60-bit portable hashes of the word n-grams of an
-    ALREADY-STAGED token-array column.  ``toks`` must be a plain
-    attribute reference (a named column), not an expression tree: it is
-    captured by the n-gram lambda, and a captured expression re-runs
-    once per array element.  Documents shorter than ``n`` tokens have
-    no n-grams (an n-gram membership test needs n tokens — standard
-    decontamination semantics).  ``sequence(1, 0)`` counts DOWN in
-    Spark, hence the explicit short-document guard."""
+def word_ngrams(toks: Column, n: int) -> Column:
+    """All word n-grams of a token-array column, in order and WITH
+    multiplicity.  ``toks`` must be a plain attribute reference (a named
+    column), not an expression tree: it is captured by the n-gram
+    lambda, and a captured expression re-runs once per array element.
+    Inputs shorter than ``n`` tokens have no n-grams; ``sequence(1, 0)``
+    counts DOWN in Spark, hence the explicit short-input guard."""
     k = F.size(toks)
-    grams = F.when(
-        k < n, F.array().cast("array<string>")
-    ).otherwise(
+    return F.when(k < n, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(1), F.greatest(k - n + 1, F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
         )
     )
+
+
+def ngram_hashes_from_tokens(toks: Column, n: int = 8) -> Column:
+    """Distinct 60-bit portable hashes of the :func:`word_ngrams` of an
+    ALREADY-STAGED token-array column.  Documents shorter than ``n``
+    tokens have no n-grams (an n-gram membership test needs n tokens —
+    standard decontamination semantics)."""
     return F.array_distinct(
         F.transform(
-            grams,
+            word_ngrams(toks, n),
             lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint"),
         )
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from medea_spark.pipeline.chunking import chunk_documents
+from medea_spark.pipeline.decontaminate import _norm_tokens
 from medea_spark.pipeline.normalize import normalize_text
 from medea_spark.pipeline.redact import redact_pii
 
@@ -55,10 +56,7 @@ def prepare_corpus(
         redact_pii(normalize_text(F.col(text_col))).alias("_clean"),
     )
     # quality columns on the cleaned text (columnar, inline — no join)
-    qt = F.trim(F.regexp_replace(F.lower(F.col("_clean")), "[^a-z0-9]+", " "))
-    qtoks = F.when(
-        F.length(qt) == 0, F.array().cast("array<string>")
-    ).otherwise(F.split(qt, " "))
+    qtoks = _norm_tokens(F.col("_clean"))
     staged = cleaned.select(
         F.col(id_col),
         F.col("_clean"),

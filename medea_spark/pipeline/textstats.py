@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from medea_spark.pipeline.decontaminate import _norm_tokens, word_ngrams
+
 # A compact stopword list shared with oracle SQL (keep sorted + lowercase).
 STOPWORDS = ("a", "an", "and", "in", "is", "of", "or", "the", "to")
 
@@ -324,29 +326,6 @@ def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # Repetition signals (Gopher-style quality filters).
 # ---------------------------------------------------------------------------
 
-def _rep_tokens(col: Column) -> Column:
-    """Normalized word tokens for repetition stats: lowercase, non-
-    alphanumerics collapsed to spaces (the decontamination convention —
-    portable to SQL engines verbatim); empty text → empty array."""
-    t = F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, " ")
-    )
-
-
-def _word_ngrams(toks: Column, n: int) -> Column:
-    """All word n-grams WITH multiplicity (no distinct — repetition
-    stats need the multiset).  ``sequence(1, 0)`` counts DOWN, hence
-    the short-input guard."""
-    k = F.size(toks)
-    return F.when(k < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(k - n + 1, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-
-
 def _max_multiplicity(arr: Column) -> Column:
     """Highest multiplicity of any element — max run length of the
     sorted array, via one sequential ``aggregate`` fold (O(len) per
@@ -388,12 +367,12 @@ def repetition_stats(
     convention used across this module)."""
     c = F.col(text_col)
     staged = df.select(
-        F.col(id_col), _rep_tokens(c).alias("_rw")
+        F.col(id_col), _norm_tokens(c).alias("_rw")
     ).select(
         F.col(id_col),
         F.size("_rw").alias("n_words"),
         F.size(F.array_distinct("_rw")).alias("_rw_distinct"),
-        *[_word_ngrams(F.col("_rw"), n).alias(f"_g{n}") for n in ns],
+        *[word_ngrams(F.col("_rw"), n).alias(f"_g{n}") for n in ns],
     )
     frac = lambda num, den: F.round(num / F.greatest(den, F.lit(1)), 6)
     out_cols = [
@@ -443,11 +422,7 @@ def tfidf_top_terms(
     tf/df and IEEE ``ln`` make it engine-portable."""
     from pyspark.sql import Window
 
-    c = F.col(text_col)
-    t = F.trim(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "))
-    toks = F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, " ")
-    )
+    toks = _norm_tokens(F.col(text_col))
     # The corpus size rides the plan as a one-row broadcast aggregate
     # instead of a separate eager df.count() job (round-5 verdict: one
     # fewer distributed count per call); same long value, same IEEE

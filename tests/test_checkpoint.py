@@ -15,12 +15,16 @@ def store(spark, tmp_path):
 
 
 def test_full_run_then_resume_skips_everything(spark, store):
+    import os
+
     df = generate_corpus(spark, 1200, seed=42)
     graph = corpus_schema_graph()
     first = run_validation_with_checkpoints(
         spark, df, graph, store, run_id="r1", num_partitions=8, n_waves=2
     )
     assert first.parts_done == 8 and first.parts_skipped == 0
+    # with no stage_location the input is staged under the store
+    assert os.path.exists(f"{store.location}/stage/run=r1/_SUCCESS")
     # checkpoint rows cover all partitions with metrics
     ckpt = store.read().filter(F.col("run_id") == "r1")
     assert ckpt.select("part_id").distinct().count() == 8
@@ -148,6 +152,8 @@ def test_schema_fingerprint_stable_across_processes(tmp_path):
     from medea_spark.checkpoint.store import _schema_fingerprint
 
     local = _schema_fingerprint(corpus_schema_graph())
+    # the value checkpoints committed by earlier versions carry
+    assert local == "64ba872121a973fa"
     prog = (
         "from medea_spark.checkpoint.store import _schema_fingerprint\n"
         "from medea_spark.corpus import corpus_schema_graph\n"

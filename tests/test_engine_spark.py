@@ -24,9 +24,7 @@ def run(spark):
     graph = corpus_schema_graph()
     skewed = detect_skewed_keys(df, "repo", skew_fraction=0.10)
     assert "repo-mono" in skewed  # the giant monorepo must be detected
-    result = validate_table(
-        df, graph, num_partitions=8, skewed_keys=skewed, repartition=True
-    )
+    result = validate_table(df, graph, num_partitions=8, skewed_keys=skewed)
     result.validated.cache()
     yield result
     result.validated.unpersist()
@@ -139,18 +137,33 @@ def test_summary_salt_buckets_seen_hand_count(run):
     assert max(got.values()) > 1  # the salted monorepo spreads its part
 
 
-def test_noshuffle_matches_repartitioned(spark, run):
-    # The default shuffle-free plan and the clustered plan agree row-for-row.
+def test_checkpointed_sinks_match_validate_table(spark, tmp_path):
+    # A checkpointed run (input shuffled once into its stage, then
+    # validated wave by wave) and the shuffle-free validate_table agree
+    # row for row, on the validated and the violations relations.
+    from medea_spark.checkpoint import CheckpointStore, run_validation_with_checkpoints
+
     df = generate_corpus(spark, 800, seed=42)
     graph = corpus_schema_graph()
-    fast = validate_table(df, graph, num_partitions=8).validated.select(
-        "repo", "path", "commit", "is_valid", "part_id"
+    skewed = detect_skewed_keys(df, "repo", skew_fraction=0.10)
+    assert "repo-mono" in skewed
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    run_validation_with_checkpoints(
+        spark, df, graph, store, run_id="sinks", num_partitions=8, n_waves=2,
+        skewed_keys=skewed, input_fingerprint="corpus-n800-seed42",
     )
-    clustered = validate_table(
-        df, graph, num_partitions=8, repartition=True
-    ).validated.select("repo", "path", "commit", "is_valid", "part_id")
-    assert fast.exceptAll(clustered).count() == 0
-    assert clustered.exceptAll(fast).count() == 0
+    direct = validate_table(df, graph, num_partitions=8, skewed_keys=skewed)
+    sinks = f"{store.location}/run=sinks/wave=*"
+    cols = ["repo", "path", "commit", "is_valid", "part_id", "content_sha256"]
+    got = spark.read.parquet(f"{sinks}/validated").select(*cols)
+    want = direct.validated.select(*cols)
+    assert got.count() == 800
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    vcols = direct.violations.columns
+    got_v = spark.read.parquet(f"{sinks}/violations").select(*vcols)
+    assert got_v.count() > 0
+    assert got_v.exceptAll(direct.violations).count() == 0
+    assert direct.violations.exceptAll(got_v).count() == 0
 
 
 def test_corpus_determinism(spark):
@@ -567,7 +580,7 @@ def test_dispatch_agrees_with_single_schema_validation(spark):
     )
     single = {
         r.i: (r.is_valid, [v.failed_constraint for v in r.violations])
-        for r in validate_table(df, g, repartition=False).validated.collect()
+        for r in validate_table(df, g).validated.collect()
     }
     dispatched = {
         r.i: (r.is_valid, [v.failed_constraint for v in r.violations])

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import jobs.ingest_dedup_job as ingest_job
+import jobs.validate_job as validate_job
 
 
 def test_ingest_dedup_job_bootstrap_ingest_and_params_guard(spark, tmp_path):
@@ -66,6 +67,49 @@ def test_ingest_dedup_job_bootstrap_ingest_and_params_guard(spark, tmp_path):
              "--pairs", f"{d}/pairs", "--k", "4"],
             spark=spark,
         )
+
+
+def _medea_result(out: str) -> dict:
+    import json
+
+    (line,) = [ln for ln in out.splitlines() if ln.startswith("MEDEA_RESULT ")]
+    return json.loads(line[len("MEDEA_RESULT "):])
+
+
+def test_validate_job_stages_under_checkpoints_and_resumes(spark, tmp_path, capsys):
+    """The validation job with no --stage-location stages its input
+    under --checkpoints, validates every part, and a resubmission of the
+    same run id skips every part; --content-col is not an option."""
+    import glob
+
+    from medea_spark.corpus import generate_corpus
+    from medea_spark.corpus.generator import CORPUS_SCHEMA_TEXT
+
+    d = str(tmp_path)
+    generate_corpus(spark, 300, seed=4).write.parquet(f"{d}/input")
+    with open(f"{d}/schema.medea", "w") as fh:
+        fh.write(CORPUS_SCHEMA_TEXT)
+    argv = [
+        "--input", f"{d}/input", "--schema", f"{d}/schema.medea",
+        "--output", f"{d}/out", "--checkpoints", f"{d}/ckpt",
+        "--run-id", "job", "--num-partitions", "4", "--waves", "2",
+    ]
+
+    assert validate_job.main(argv) == 0
+    first = _medea_result(capsys.readouterr().out)
+    assert (first["parts_done"], first["parts_skipped"], first["waves_run"]) == (4, 0, 2)
+    assert len(glob.glob(f"{d}/ckpt/stage/run=job-*/_SUCCESS")) == 1
+    validated = spark.read.parquet(f"{d}/out/run=job/wave=*/validated")
+    assert validated.count() == 300
+
+    assert validate_job.main(argv) == 0
+    again = _medea_result(capsys.readouterr().out)
+    assert (again["parts_done"], again["parts_skipped"], again["waves_run"]) == (0, 4, 0)
+
+    with pytest.raises(SystemExit) as exc:
+        validate_job.main(argv + ["--content-col", "content"])
+    assert exc.value.code == 2
+    assert "--content-col" in capsys.readouterr().err
 
 
 def test_oracle_sql_identical_across_processes():
