@@ -3,37 +3,34 @@
 The missing last step of every dedup pipeline: pair relations
 (MinHash-LSH candidates, SimHash near-pairs, embedding near-dups) give
 EDGES, but the thing a dedup job acts on is the CLUSTER — keep one
-document per connected component.  Spark has no built-in; two
-DataFrame-only algorithms are provided:
+document per connected component.  Spark has no built-in; one
+DataFrame-only entry point runs two algorithms in sequence, each on
+the input shape where it wins:
 
-* ``algorithm="propagation"`` (default): min-label propagation with
-  pointer jumping — ``label(n) ← min(label(n), neighbors' labels)``
-  followed by one shortcut hop ``label ← min(label, label(label))``
-  per round, to a fixpoint.  The jump halves the remaining path only
-  where ids increase along it: a path whose ids increase closes in
-  O(log diameter) rounds (6 at 60 nodes, 10 at 1,000), but the same
-  path with its ids shuffled needs rounds in proportion to its length
-  (13-38 at 60 nodes, 191-371 at 1,000, over five shuffles, replaying
-  the round rule in pure Python).  Near-dup clusters are shallow (a
-  duplicate family collapses in 2-3 hops), and on those shapes this
-  is the cheaper algorithm per round.  The convergence signal rides
-  the SAME aggregation that produces the new labels
-  (``Dataset.observe`` on the eagerly-checkpointed round output) —
-  one job per round, not two.
+* **Min-label propagation with pointer jumping** runs first:
+  ``label(n) ← min(label(n), neighbors' labels)`` followed by one
+  shortcut hop ``label ← min(label, label(label))`` per round, to a
+  fixpoint.  Near-dup clusters are shallow (a duplicate family
+  collapses in 2-3 hops), and on those shapes it is the cheaper
+  algorithm per round.  The jump halves the remaining path only where
+  ids increase along it: a path of ``n`` nodes whose ids increase
+  closes within ``⌈log2 n⌉ + 1`` rounds, the same path with shuffled
+  ids in rounds proportional to its length (191-371 at 1,000 nodes).
 
-* ``algorithm="star"``: the alternating large-star / small-star
-  algorithm (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", ACM SoCC 2014 — public paper), which contracts
-  components in O(log n) rounds regardless of diameter or id order.
-  The algorithm for long chains whose ids do not increase along them,
-  where propagation's round budget trips.  More shuffles per round, so
-  it is NOT the default for dedup-shaped inputs.
+* **Large-star / small-star** (Kiveris et al., "Connected Components
+  in MapReduce and Beyond", ACM SoCC 2014 — public paper) takes over
+  from propagation after ``⌈log2 n⌉ + 1`` rounds, ``n`` being the node
+  count observed on the initial labels checkpoint.  It contracts
+  components in O(log n) rounds regardless of diameter or id order,
+  at more shuffles per round, starting from propagation's labels.
 
 Deterministic by construction: labels are min document ids — no
 randomness, rerun-stable, resume-safe (the same contract as the
 engine's partitioning).  Nodes appearing ONLY in self-loop pairs
 (u == u) still appear in the output as their own singleton component —
-the node universe is derived from the unfiltered edge list.
+the node universe is derived from the unfiltered edge list.  An edge
+with a NULL endpoint connects nothing; its NULL node is one
+``(NULL, NULL)`` row.
 """
 
 from __future__ import annotations
@@ -44,19 +41,17 @@ from pyspark.sql import functions as F
 
 def _checkpoint_like(df: DataFrame, like: DataFrame) -> DataFrame:
     """``df.localCheckpoint()`` carrying the size estimate of ``like``, an
-    earlier checkpoint of the same shape, instead of the estimate of
-    ``df``'s own plan.
+    earlier checkpoint, instead of the estimate of ``df``'s own plan.
 
     A checkpointed relation keeps its source plan's Catalyst size
     estimate, and without CBO a join's estimate is the product of its
-    sides.  Each propagation round's pointer jump self-joins a plan on
-    the previous round's checkpoint, so the carried estimate squares
+    sides.  Each round's plan joins the previous round's checkpoint
+    (the pointer jump self-joins it), so the carried estimate squares
     every round: its digit count doubles (5,267 digits by round 7 on a
     60-node path with shuffled ids) until the BigInt arithmetic alone
-    takes seconds to minutes per round.  Every round's labels hold one
-    row per node, like the initial labels, so the initial checkpoint's
-    estimate serves them all; partitioning, ordering and constraints
-    are kept."""
+    takes seconds to minutes per round.  Every round holds about one
+    row per node or per edge, so the initial labels' estimate serves
+    them all; partitioning, ordering and constraints are kept."""
     ck = df.localCheckpoint()
     rel = ck._jdf.logicalPlan()  # the LogicalRDD over the checkpointed rows
     session, _, constraints = (rel.otherCopyArgs().apply(i) for i in range(3))
@@ -78,40 +73,27 @@ def _checkpoint_like(df: DataFrame, like: DataFrame) -> DataFrame:
     )
 
 
-def _node_universe(e0: DataFrame) -> DataFrame:
-    """Every node mentioned in the UNFILTERED edge list (self-loops
-    included) — so self-loop-only nodes are never dropped."""
-    return (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
-        .distinct()
-    )
-
-
 def connected_components(
     edges: DataFrame,
     src_col: str = "a",
     dst_col: str = "b",
     max_iter: int = 25,
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``, where
     ``component`` is the smallest node id in the node's connected
     component.  Raises if the fixpoint is not reached in ``max_iter``
-    rounds.  With pointer jumping, propagation needs O(log diameter)
-    rounds only when ids increase along each path; a long chain with
-    shuffled ids needs rounds in proportion to its length, and
-    ``algorithm="star"`` closes any graph in O(log n) rounds, with
-    more shuffles per round.
+    rounds, counted over both phases.
 
-    Each propagation iteration: propagate every node's current label to
+    Each propagation round: propagate every node's current label to
     all of its neighbors, keep the per-node minimum, then shortcut one
     hop through the fresh label table.  Labels only ever decrease and
-    are bounded below by the true component minimum, so the loop
-    terminates; the changed-label count is observed on the same job
-    that materializes the round (no separate convergence job)."""
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(f"algorithm must be 'propagation' or 'star', got {algorithm!r}")
+    are bounded below by the true component minimum; the changed-label
+    count rides the job that checkpoints the round (``Dataset.observe``,
+    no separate convergence job).  A graph still changing after
+    ``⌈log2 n⌉ + 1`` rounds (a long chain whose ids do not increase
+    along it) hands its labels to the large-star / small-star rounds.
+    When ``⌈log2 n⌉ + 1`` alone reaches ``max_iter`` (n > 2^23 at the
+    default), propagation spends every round and there is no hand-off."""
     # The edge relation is typically the OUTPUT of a candidate
     # generator (LSH bucket join, SimHash bands) — an expensive
     # subtree.  It feeds two consumers (the symmetric neighbor
@@ -119,16 +101,14 @@ def connected_components(
     # runs once per consumer (the CLAUDE.md unpersisted-consumer
     # class).  Edge-sized, already the algorithm's working set.
     e0 = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")).persist()
-    if algorithm == "star":
-        try:
-            return _star_components(e0, max_iter)
-        finally:
-            e0.unpersist()
     e = e0.filter(F.col("u") != F.col("v"))
     # Symmetric neighbor relation, reused every round.
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).persist()
+    # The node universe comes from the UNFILTERED edge list, so
+    # self-loop-only nodes are never dropped; its observed row count
+    # sets the hand-off round.
     # Lineage MUST be truncated each round: ``labels`` appears twice in
     # every iteration's plan (neighbor join + union), so without a
     # checkpoint the logical plan DOUBLES per round — 2^rounds nodes,
@@ -136,11 +116,20 @@ def connected_components(
     # executor-local storage and cuts the plan; a production run on a
     # preemptible cluster would use reliable checkpoint(dir) instead
     # (same call shape, durable storage).
+    obs = Observation()
     labels = first = (
-        _node_universe(e0).withColumn("label", F.col("node")).localCheckpoint()
+        e0.select(F.col("u").alias("node"))
+        .unionByName(e0.select(F.col("v").alias("node")))
+        .distinct()
+        .withColumn("label", F.col("node"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
     )
+    # Pointer jumping closes any increasing-id path of n nodes within
+    # ⌈log2 n⌉ + 1 rounds, where the changed count halves only at the end.
+    rounds = min(max(obs.get["n"] - 1, 0).bit_length() + 1, max_iter)
     try:
-        for _ in range(max_iter):
+        for _ in range(rounds):
             # label candidates: every neighbor's label, tagged non-self;
             # the node's own current label rides along tagged self, so
             # ONE groupBy yields both the new label (min over all) and
@@ -199,21 +188,68 @@ def connected_components(
             labels = new_labels
             if (obs.get["changed"] or 0) == 0:
                 return labels.select("node", F.col("label").alias("component"))
+        # A fixpoint needs a round left to confirm it.
+        if rounds < max_iter:
+            # Hand-off: contract the ORIGINAL edges through the labels.
+            # The (node, label) pairs alone would split 20-10-30-5, which
+            # reads {20:10, 10:10, 30:5, 5:5} after one round.  The
+            # component minimum labels itself, so the star map sends
+            # every other label of the component to it.
+            lu = labels.select(F.col("node").alias("u"), F.col("label").alias("lu"))
+            lv = labels.select(F.col("node").alias("v"), F.col("label").alias("lv"))
+            contracted = (
+                e.join(lu, "u")
+                .join(lv, "v")
+                .filter(F.col("lu") != F.col("lv"))
+                .select(
+                    F.least("lu", "lv").alias("lo"), F.greatest("lu", "lv").alias("hi")
+                )
+                .distinct()
+            )
+            star = _star_components(contracted, first, max_iter - rounds)
+            if star is not None:
+                return labels.join(star, labels["label"] == star["hi"], "left").select(
+                    "node", F.coalesce("component", "label").alias("component")
+                )
     finally:
         sym.unpersist()
         e0.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
-        "a long chain whose ids do not increase along it needs rounds in "
-        "proportion to its length; raise max_iter or use algorithm='star' "
-        "(O(log n) rounds)"
+        "propagation closes a path in O(log n) rounds only where ids "
+        "increase along it, and large-star / small-star needs O(log n) "
+        "rounds after the hand-off; raise max_iter"
     )
 
 
-def _star_components(e0: DataFrame, max_iter: int) -> DataFrame:
-    """Alternating large-star / small-star (Kiveris et al., SoCC'14).
+def _fingerprinted(edges: DataFrame, like: DataFrame) -> tuple[DataFrame, tuple]:
+    """Checkpoint a canonical ``(lo, hi)`` edge set with its fingerprint
+    (count + two independent 64-bit hash sums) observed on the same
+    job — a probabilistic set-equality check whose collision odds are
+    ~2^-128 per round."""
+    obs = Observation()
+    # decimal(38,0) sums: a long sum of 64-bit hashes would overflow
+    # under ANSI mode after a few billion edges (or a few rows of
+    # adversarial hash values)
+    ck = _checkpoint_like(
+        edges.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.xxhash64(F.lit(1), "lo", "hi").cast("decimal(38,0)")).alias("h1"),
+            F.sum(F.xxhash64(F.lit(2), "lo", "hi").cast("decimal(38,0)")).alias("h2"),
+        ),
+        like,
+    )
+    return ck, tuple(obs.get[k] for k in ("n", "h1", "h2"))
 
-    Edges are kept canonical ``(lo, hi)`` with ``lo < hi``.  One round:
+
+def _star_components(
+    contracted: DataFrame, like: DataFrame, max_rounds: int
+) -> DataFrame | None:
+    """Alternating large-star / small-star (Kiveris et al., SoCC'14) over
+    canonical ``(lo, hi)`` edges with ``lo < hi``: the ``(hi, component)``
+    map of every non-minimum vertex, or None if ``max_rounds`` rounds
+    do not reach the fixpoint.  One round:
 
     * **large-star**: per node u over its full symmetric neighborhood,
       m = min(N(u) ∪ {u}); emit (v, m) for every neighbor v > u.
@@ -223,38 +259,13 @@ def _star_components(e0: DataFrame, max_iter: int) -> DataFrame:
 
     Both steps only ever connect nodes to smaller nodes within their
     component, and the alternation provably converges to disjoint
-    stars centered at each component's minimum in O(log n) rounds.
-    Convergence is detected when the canonical edge set's fingerprint
-    (count + two independent 64-bit hash sums, observed on the same
-    job that checkpoints the round) stops changing — a probabilistic
-    set-equality check whose collision odds are ~2^-128 per round."""
-    nodes = _node_universe(e0)
-
-    def fingerprint_metrics():
-        # decimal(38,0) sums: a long sum of 64-bit hashes would overflow
-        # under ANSI mode after a few billion edges (or a few rows of
-        # adversarial hash values)
-        return (
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64(F.lit(1), "lo", "hi").cast("decimal(38,0)")).alias("h1"),
-            F.sum(F.xxhash64(F.lit(2), "lo", "hi").cast("decimal(38,0)")).alias("h2"),
-        )
-
-    obs0 = Observation()
-    cur = (
-        e0.filter(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("lo"), F.greatest("u", "v").alias("hi")
-        )
-        .distinct()
-        .observe(obs0, *fingerprint_metrics())
-        .localCheckpoint()
-    )
-    prev_fp = tuple(obs0.get[k] for k in ("n", "h1", "h2"))
-
-    for _ in range(max_iter):
-        if prev_fp[0] == 0:  # no non-self-loop edges: all singletons
-            break
+    stars centered at each component's minimum in O(log n) rounds —
+    detected when the edge set's fingerprint stops changing."""
+    cur, fp = _fingerprinted(contracted, like)
+    prev, spent = None, 0
+    while fp[0] and fp != prev:  # no edges left: nothing to relabel
+        if spent == max_rounds:
+            return None
         # --- large-star over the symmetric neighborhood -------------------
         sym = cur.select(
             F.col("lo").alias("u"), F.col("hi").alias("v")
@@ -281,39 +292,26 @@ def _star_components(e0: DataFrame, max_iter: int) -> DataFrame:
             .select(F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi"))
             .distinct()
         )
-        obs = Observation()
-        cur = ss.observe(obs, *fingerprint_metrics()).localCheckpoint()
-        fp = tuple(obs.get[k] for k in ("n", "h1", "h2"))
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
-        raise RuntimeError(
-            f"connected_components(algorithm='star') did not converge in "
-            f"{max_iter} rounds — O(log n) bound exceeded; malformed input?"
-        )
+        prev = fp
+        cur, fp = _fingerprinted(ss, like)
+        spent += 1
     # Converged: ``cur`` is a forest of stars, each centered at its
-    # component minimum — hi → lo IS the label map; everything else
-    # (roots, isolated nodes, self-loop-only nodes) labels itself.
-    # The min() re-aggregation is a no-op post-convergence, kept as a
-    # cheap safety net against fingerprint-collision false positives.
-    star = cur.groupBy("hi").agg(F.min("lo").alias("component"))
-    return nodes.join(
-        star.select(F.col("hi").alias("node"), "component"), "node", "left"
-    ).select("node", F.coalesce("component", "node").alias("component"))
+    # component minimum — hi → lo IS the label map.  The min()
+    # re-aggregation is a no-op post-convergence, kept as a cheap
+    # safety net against fingerprint-collision false positives.
+    return cur.groupBy("hi").agg(F.min("lo").alias("component"))
 
 
 def duplicate_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Dedup-flavored wrapper: candidate pairs → (doc_id, cluster_id,
     is_keeper).  ``cluster_id`` is the smallest doc id in the cluster
     and also the document to keep (min-id keep rule, the same rule
     exact_duplicate_groups uses)."""
-    cc = connected_components(pairs, a_col, b_col, algorithm=algorithm)
+    cc = connected_components(pairs, a_col, b_col)
     return cc.select(
         F.col("node").alias("doc_id"),
         F.col("component").alias("cluster_id"),

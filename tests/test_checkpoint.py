@@ -148,6 +148,7 @@ def test_schema_fingerprint_stable_across_processes(tmp_path):
     import os
     import subprocess
     import sys
+    from pathlib import Path
 
     from medea_spark.checkpoint.store import _schema_fingerprint
 
@@ -159,8 +160,9 @@ def test_schema_fingerprint_stable_across_processes(tmp_path):
         "from medea_spark.corpus import corpus_schema_graph\n"
         "print(_schema_fingerprint(corpus_schema_graph()))\n"
     )
+    repo = str(Path(__file__).resolve().parents[1])
     for seed in ("0", "12345"):
-        env = dict(os.environ, PYTHONHASHSEED=seed, PYTHONPATH="/root/repo")
+        env = dict(os.environ, PYTHONHASHSEED=seed, PYTHONPATH=repo)
         out = subprocess.run(
             [sys.executable, "-c", prog], env=env, capture_output=True, text=True
         )

@@ -1077,6 +1077,14 @@ def test_connected_components_shapes(spark):
         20: 20, 21: 20, 22: 20, 23: 20,
         30: 30, 31: 30,
     }
+    # error-path contracts: an empty edge frame gives no rows; an edge
+    # with a NULL endpoint connects nothing, and its NULL node is one
+    # (NULL, NULL) row
+    empty = spark.createDataFrame([], "a long, b long")
+    assert connected_components(empty).count() == 0
+    nulls = spark.createDataFrame([(1, None), (5, None), (1, 2)], "a long, b long")
+    got = {r.node: r.component for r in connected_components(nulls).collect()}
+    assert got == {1: 1, 2: 1, 5: 5, None: None}
 
 
 def test_connected_components_long_chain_converges(spark):
@@ -1100,17 +1108,12 @@ def test_connected_components_diameter_guard(spark):
 
 def test_connected_components_self_loop_only_nodes(spark):
     """A node mentioned ONLY in self-loop pairs still gets a cluster
-    row (its own singleton) instead of vanishing from the output —
-    both algorithms."""
+    row (its own singleton) instead of vanishing from the output."""
     from medea_spark.pipeline import connected_components, duplicate_clusters
 
     df = spark.createDataFrame([(7, 7), (1, 2), (3, 3)], ["a", "b"])
-    for alg in ("propagation", "star"):
-        got = {
-            r.node: r.component
-            for r in connected_components(df, algorithm=alg).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 3, 7: 7}, alg
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == {1: 1, 2: 1, 3: 3, 7: 7}
     rows = {
         r.doc_id: (r.cluster_id, r.is_keeper)
         for r in duplicate_clusters(
@@ -1126,7 +1129,7 @@ def test_connected_components_log_diameter_bound(spark):
     (round-6 optimization: label ← min(label, label(label)) each round)
     closes it within 8 rounds — the pre-jump diameter-bound loop could
     not — and still trips the non-convergence guard when the budget is
-    below the log bound.  Star converges within 8 rounds as before."""
+    below the log bound.  The default budget converges too."""
     import pytest
 
     from medea_spark.pipeline import connected_components
@@ -1138,13 +1141,10 @@ def test_connected_components_log_diameter_bound(spark):
         for r in connected_components(df, max_iter=8).collect()
     }
     assert got == {i: 0 for i in range(n + 1)}
-    with pytest.raises(RuntimeError, match="algorithm='star'"):
+    with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2)
-    got_star = {
-        r.node: r.component
-        for r in connected_components(df, max_iter=8, algorithm="star").collect()
-    }
-    assert got_star == {i: 0 for i in range(n + 1)}
+    got_default = {r.node: r.component for r in connected_components(df).collect()}
+    assert got_default == {i: 0 for i in range(n + 1)}
 
 
 def _union_find_components(edges: list) -> dict:
@@ -1176,11 +1176,13 @@ def _union_find_components(edges: list) -> dict:
 
 
 def test_connected_components_star_random_graph_vs_union_find(spark):
-    """The star algorithm against the same union-find ground truth as
-    the propagation differential — a seeded random graph plus a
-    long-chain tail grafted onto one component, and a path whose ids
-    are shuffled along it (the shape that takes pointer-jumping
-    propagation O(diameter) rounds, not O(log diameter))."""
+    """Long chains against union-find at the default budget: a seeded
+    random graph plus a long-chain tail grafted onto one component,
+    and paths whose ids are shuffled along them (the shape that takes
+    pointer-jumping propagation O(diameter) rounds, not O(log
+    diameter), so it hands its labels off to large-star / small-star),
+    one of them with string ids; and the 20-10-30-5 path, whose
+    (node, label) pairs alone split it in two after one round."""
     import random
 
     from medea_spark.pipeline import connected_components
@@ -1194,23 +1196,24 @@ def test_connected_components_star_random_graph_vs_union_find(spark):
     ids = list(range(200))
     rng.shuffle(ids)
     shuffled_path = list(zip(ids, ids[1:]))
+    names = [f"doc-{i:03d}" for i in range(120)]
+    rng.shuffle(names)
+    string_path = list(zip(names, names[1:]))
 
-    for graph in (edges, shuffled_path):
+    for graph in (edges, shuffled_path, string_path, [(20, 10), (10, 30), (30, 5)]):
         df = spark.createDataFrame(graph, ["a", "b"])
-        got = {
-            r.node: r.component
-            for r in connected_components(df, algorithm="star").collect()
-        }
+        got = {r.node: r.component for r in connected_components(df).collect()}
         assert got == _union_find_components(graph)
 
 
 def test_connected_components_round_estimate_stays_bounded(spark, monkeypatch):
-    """Each propagation round checkpoints its labels.  The checkpoint
-    must not carry the Catalyst size estimate of the round's plan: the
-    pointer-jump self-join squares it, so carried forward its digit
-    count doubles every round, and the BigInt arithmetic alone makes
-    rounds 18-22 of this path take seconds to minutes.  The shuffled-id
-    path needs more than 20 rounds, so the guard raises."""
+    """Each round checkpoints its labels (propagation) or edges (star).
+    The checkpoint must not carry the Catalyst size estimate of the
+    round's plan: the pointer-jump self-join squares it, so carried
+    forward its digit count doubles every round, and the BigInt
+    arithmetic alone makes each later round take seconds to minutes.
+    The shuffled-id path hands off to the star rounds, so both
+    phases' checkpoints are checked."""
     import random
 
     from medea_spark.pipeline import connected_components
@@ -1229,9 +1232,8 @@ def test_connected_components_round_estimate_stays_bounded(spark, monkeypatch):
         return checkpoint(self, *args, **kwargs)
 
     monkeypatch.setattr(type(df), "localCheckpoint", recording)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=20)
-    assert len(digits) == 21  # the initial labels and 20 rounds
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _union_find_components(list(zip(ids, ids[1:])))
 
 
 def test_duplicate_clusters_keeper(spark):
@@ -1857,7 +1859,9 @@ def test_media_codec_fuzz_never_crashes():
 
 def test_connected_components_random_graph_vs_union_find(spark):
     """Seeded random graph (200 nodes, 150 edges → many components of
-    varied shapes) vs a Python union-find ground truth."""
+    varied shapes) and a 1,000-node path with shuffled ids (propagation
+    alone needs hundreds of rounds) vs a Python union-find ground
+    truth, both with the default round budget."""
     import random
 
     from medea_spark.pipeline import connected_components
@@ -1866,34 +1870,14 @@ def test_connected_components_random_graph_vs_union_find(spark):
     nodes = list(range(200))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
     edges = [(a, b) for a, b in edges if a != b]
+    ids = list(range(1000))
+    rng.shuffle(ids)
+    shuffled_path = list(zip(ids, ids[1:]))
 
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    in_edges = {a for a, _ in edges} | {b for _, b in edges}
-    truth = {n: find(n) for n in in_edges}
-    # normalize: component label = min node id in component
-    comp_min = {}
-    for n, r in truth.items():
-        comp_min.setdefault(find(r), set()).add(n)
-    want = {}
-    for members in comp_min.values():
-        m = min(members)
-        for n in members:
-            want[n] = m
-
-    df = spark.createDataFrame(edges, ["a", "b"])
-    got = {r.node: r.component for r in connected_components(df).collect()}
-    assert got == want
+    for graph in (edges, shuffled_path):
+        df = spark.createDataFrame(graph, ["a", "b"])
+        got = {r.node: r.component for r in connected_components(df).collect()}
+        assert got == _union_find_components(graph)
 
 
 def test_normalize_table_nfc(spark):

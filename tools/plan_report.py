@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from medea_spark.corpus import corpus_schema_graph, generate_corpus  # noqa: E402
@@ -89,7 +91,7 @@ def main() -> None:
         "- every parquet scan is column-pruned to exactly the referenced",
         "  columns, with filters pushed to the scan where applicable.",
     ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(ROOT / "PLANS.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote PLANS.md")
 
