@@ -1563,19 +1563,21 @@ def q_dedup_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CKPT_ORACLE_BASE = f"{_STAGE_ROOT}/checkpoint"
 # The generator is deterministic in (rows, seed), so its params ARE the
-# content fingerprint; the staged directory is keyed run_id-sha256(fp)[:8]
-# (checkpoint/store.py) and the DuckDB oracle reads the same key.
+# content fingerprint; the staged directory is named by
+# checkpoint/store.py stage_key and the DuckDB oracle reads the same key.
 _CKPT_ORACLE_FP = "generate_corpus:rows=8000:seed=7"
+_CKPT_ORACLE_PARTS = 16
+_CKPT_ORACLE_WAVES = 4
 
 
 def _ckpt_stage_key() -> str:
-    import hashlib
+    from medea_spark.checkpoint.store import stage_key
 
-    return "oracle-" + hashlib.sha256(_CKPT_ORACLE_FP.encode()).hexdigest()[:8]
+    return stage_key("oracle", _CKPT_ORACLE_FP, _CKPT_ORACLE_PARTS, _CKPT_ORACLE_WAVES)
 
 
 def q_checkpoint_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C2/C3/C15 end-to-end: stage the corpus partitioned by part_id
+    """C2/C3/C15 end-to-end: stage the corpus partitioned by wave_id
     (guaranteed wave pruning), validate wave-by-wave committing
     per-partition checkpoint rows + parquet sinks, then read the
     committed checkpoint table back.  The staged input carries
@@ -1596,8 +1598,8 @@ def q_checkpoint_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_schema_graph(),
         store,
         run_id="oracle",
-        num_partitions=16,
-        n_waves=4,
+        num_partitions=_CKPT_ORACLE_PARTS,
+        n_waves=_CKPT_ORACLE_WAVES,
         # Exercises the safe stage+resume path under the oracle gate
         # instead of tripping the engine's own missing-lineage warning
         # (round-3 verdict item 4).

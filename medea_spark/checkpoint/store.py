@@ -8,11 +8,20 @@ repo column (medea_spark.engine.partitioning — no rand()), a rerun of
 the same input assigns identical partition ids, so resume is a plain
 anti-join: pending = all part ids ∖ checkpointed part ids.
 
-Partitions are processed in *waves* (part_id % n_waves) — each wave is
-one Spark job whose results and checkpoint rows are committed together.
-At 100 TB the wave count bounds both failure blast-radius and the
-driver loop (e.g. 64 waves of ~1.6 TB); the loop is over waves, never
-over rows.
+Partitions are processed in *waves* (wave_id = part_id % n_waves) —
+each wave's results and checkpoint rows are committed together.  At
+100 TB the wave count bounds both failure blast-radius and the driver
+loop (e.g. 64 waves of ~1.6 TB); the loop is over waves, never over
+rows.
+
+Every run stages its input once, clustered by wave and spread by row
+key: one exchange hashes ``(wave_id, repo, path, commit)`` over the
+write tasks and ``partitionBy(wave_id)`` files each row under its
+wave's directory.  A wave's directory therefore holds one file of about
+equal size per write task, whatever the repo sizes, so its scan plans
+equal splits and its kernel tasks get equal rows.  (Clustering by
+part_id instead gives a monorepo's part the largest files of its wave,
+and FilePartition packs files largest first — into one split.)
 
 Storage: Iceberg (``writeTo(...).append()``) when a table catalog is
 configured, parquet subdirectories otherwise (the sandbox path).
@@ -32,8 +41,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from medea_spark.compiler.analyzer import ANY_NODE, SchemaGraph
-from medea_spark.engine.partitioning import PART_ID, SALT_ID, with_partition_columns
+from medea_spark.engine.partitioning import PART_ID, with_partition_columns
 from medea_spark.engine.validate import ValidationRun, validate_table
+
+WAVE_ID = "wave_id"
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -58,6 +69,22 @@ def _exists(spark: SparkSession, path: str) -> bool:
     driver (no Spark job, no exception round-trip)."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
+def stage_key(
+    run_id: str, input_fingerprint: str, num_partitions: int, n_waves: int
+) -> str:
+    """The name of a run's stage directory, ``<stage_location>/run=<key>``.
+
+    The staged rows depend on the input and on the layout: part ids
+    come from ``num_partitions`` and the wave directories from
+    ``n_waves``.  So all of them key the stage, and a run that changes
+    any of them restages instead of reading rows filed under another
+    layout."""
+    key = f"{run_id}-p{num_partitions}w{n_waves}"
+    if input_fingerprint:
+        key += "-" + hashlib.sha256(input_fingerprint.encode()).hexdigest()[:8]
+    return key
 
 
 def _schema_fingerprint(graph: SchemaGraph) -> str:
@@ -194,28 +221,20 @@ def run_validation_with_checkpoints(
     per wave; re-invoking with the same ``run_id`` skips checkpointed
     partitions via anti-join and processes only the remainder.
 
-    Every run stages its input once: one pass assigns part ids and
-    writes the rows under ``stage_location`` (default
-    ``<store.location>/stage``) partitioned by part_id, and every wave
+    Every run stages its input once: one pass assigns part and wave ids
+    and writes the rows under ``stage_location`` (default
+    ``<store.location>/stage``) partitioned by wave_id, and every wave
     reads its slice of that stage with partition pruning at the source.
-    The stage is keyed by ``(run_id, input_fingerprint)`` and reused
-    once committed, so a resumed run reads exactly the input its stage
-    captured."""
+    The stage is keyed by ``stage_key`` and reused once committed, so a
+    resumed run reads exactly the input its stage captured."""
     run_id = run_id or uuid.uuid4().hex[:12]
     fingerprint = _schema_fingerprint(graph)
     if stage_location is None:
         stage_location = f"{store.location}/stage"
 
     base = with_partition_columns(df, num_partitions, skewed_keys=skewed_keys)
-    # The stage is keyed by (run_id, input fingerprint): a rerun of the
-    # same run_id after the input moved must not reuse the stale staged
-    # rows (the lineage check already forces a full re-validation in
-    # that case — it has to see the new input).
-    stage_key = run_id
-    if input_fingerprint:
-        stage_key += "-" + hashlib.sha256(input_fingerprint.encode()).hexdigest()[:8]
-    else:
-        # Without a fingerprint the stage is keyed by run_id alone and
+    if not input_fingerprint:
+        # Without a fingerprint the stage is keyed without the input and
         # done_part_ids skips the input-lineage filter — resuming the
         # same run_id after the input changed would silently reuse stale
         # staged rows AND skip checkpointed parts.
@@ -226,32 +245,31 @@ def run_validation_with_checkpoints(
             "safe stage+resume.",
             stacklevel=2,
         )
-    stage_path = f"{stage_location.rstrip('/')}/run={stage_key}"
-    # Read back with the schema already known (partitionBy moves
-    # part_id last): no schema-inference job, first run or resume.
+    key = stage_key(run_id, input_fingerprint, num_partitions, n_waves)
+    stage_path = f"{stage_location.rstrip('/')}/run={key}"
+    # Read back with the schema already known: no schema-inference job,
+    # first run or resume.  The data columns are matched by name, so
+    # listing part_id last keeps the column order the sinks have always
+    # had; partitionBy puts wave_id after them.
     stage_schema = T.StructType(
         [f for f in base.schema.fields if f.name != PART_ID]
-        + [T.StructField(PART_ID, T.IntegerType())]
+        + [T.StructField(PART_ID, T.IntegerType()), T.StructField(WAVE_ID, T.IntegerType())]
     )
     # Only a _SUCCESS-committed stage is reusable on resume — a crashed
     # stage write is rebuilt, never trusted.
     if not _exists(spark, f"{stage_path}/_SUCCESS"):
         # The content bytes shuffle exactly once for the whole run (not
-        # once per wave), and partitionBy files every row under its
-        # part_id=N directory, so each wave reads its pruned slice with
-        # no further exchange.  The exchange is sized to the write
-        # slots: more tasks than slots only add task launches and small
-        # files (on 4 cores, 32 write tasks took 2.19 s for the 23.7 MB
-        # that 4 wrote in 1.30 s).  SALT_ID is part of the exchange key
-        # so a skewed monorepo's part spreads over every write task
-        # instead of recreating the straggler the salting exists to
-        # prevent.  The directory layout does not depend on the
-        # exchange width, so a stage written at any width resumes the
-        # same way.
+        # once per wave).  The exchange is sized to the write slots:
+        # more tasks than slots only add task launches and small files
+        # (on 4 cores, 32 write tasks took 2.19 s for the 23.7 MB that 4
+        # wrote in 1.30 s).  It hashes the row key as well as wave_id,
+        # so every write task gets an equal share of every wave, however
+        # large one repo is, and writes one file into each wave's
+        # directory.
         write_tasks = min(num_partitions, spark.sparkContext.defaultParallelism)
-        base.repartition(write_tasks, F.col(PART_ID), F.col(SALT_ID)).write.mode(
-            "overwrite"
-        ).partitionBy(PART_ID).parquet(stage_path)
+        base.withColumn(WAVE_ID, F.pmod(F.col(PART_ID), F.lit(n_waves))).repartition(
+            write_tasks, F.col(WAVE_ID), F.col("repo"), F.col("path"), F.col("commit")
+        ).write.mode("overwrite").partitionBy(WAVE_ID).parquet(stage_path)
     base = spark.read.schema(stage_schema).parquet(stage_path)
 
     done = {
@@ -262,85 +280,92 @@ def run_validation_with_checkpoints(
             input_fingerprint=input_fingerprint or None,
         ).collect()
     }
-    parts_skipped = len(done)
-    waves_run = 0
-    parts_done = 0
+    plan = [
+        (wave, parts)
+        for wave in range(n_waves)
+        if (parts := [p for p in range(num_partitions) if p % n_waves == wave and p not in done])
+    ]
 
-    for wave in range(n_waves):
-        wave_parts = [
-            p for p in range(num_partitions) if p % n_waves == wave and p not in done
-        ]
-        if not wave_parts:
-            continue
-        t0 = time.monotonic()
-        # The filter is on the stored part_id column, so the scan prunes
-        # to the wave's directories, and the staged rows are already
-        # clustered by part_id: the wave plan has no exchange before
-        # the kernel.
-        wave_df = base.filter(F.col(PART_ID).isin(wave_parts))
-        result: ValidationRun = validate_table(
+    def build(wave: int, wave_parts: list[int]) -> ValidationRun:
+        # The wave_id filter prunes the scan to the wave's directory;
+        # the part_id filter is a row filter that drops the parts a
+        # partial resume already committed.  The wave plan has no
+        # exchange before the kernel.
+        wave_df = base.filter(
+            (F.col(WAVE_ID) == wave) & F.col(PART_ID).isin(wave_parts)
+        ).drop(WAVE_ID)
+        return validate_table(
             wave_df, graph, num_partitions=num_partitions, skewed_keys=skewed_keys
         )
-        out = f"{(output_location or store.location).rstrip('/')}/run={run_id}/wave={wave}"
-        # One kernel pass per wave: the validated relation feeds three
-        # consumers (validated sink, violations sink, summary commit) —
-        # without a persist each consumer would re-run the UDF stage,
-        # tripling the wave's kernel cost.  Wave size already bounds the
-        # cache footprint (that is what waves are for).  The three
-        # consumers are independent, so they run as CONCURRENT jobs
-        # (driver threads): the later jobs' tasks back-fill executors
-        # freed by the first job's tail instead of waiting for it, and
-        # the cache's per-partition loading locks guarantee the kernel
-        # still runs once per partition whichever job gets there first.
-        result.validated.persist()
-        try:
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_validated = pool.submit(
-                    lambda: result.validated.drop("violations")
-                    .write.mode("overwrite")
-                    .parquet(f"{out}/validated")
-                )
-                f_violations = pool.submit(
-                    lambda: result.violations.write.mode("overwrite").parquet(
-                        f"{out}/violations"
+
+    # A wave's plan takes ~0.2 s of driver time (hundreds of py4j
+    # calls) to build, so the next wave's plan is built on a planner
+    # thread while the current wave's jobs run.
+    with ThreadPoolExecutor(max_workers=1) as planner:
+        next_plan = planner.submit(build, *plan[0]) if plan else None
+        for i, (wave, wave_parts) in enumerate(plan):
+            t0 = time.monotonic()
+            result: ValidationRun = next_plan.result()
+            if i + 1 < len(plan):
+                next_plan = planner.submit(build, *plan[i + 1])
+            out = f"{(output_location or store.location).rstrip('/')}/run={run_id}/wave={wave}"
+            # One kernel pass per wave: the validated relation feeds three
+            # consumers (validated sink, violations sink, summary commit) —
+            # without a persist each consumer would re-run the UDF stage,
+            # tripling the wave's kernel cost.  Wave size already bounds the
+            # cache footprint (that is what waves are for).  The three
+            # consumers are independent, so they run as CONCURRENT jobs
+            # (driver threads): the later jobs' tasks back-fill executors
+            # freed by the first job's tail instead of waiting for it, and
+            # the cache's per-partition loading locks guarantee the kernel
+            # still runs once per partition whichever job gets there first.
+            result.validated.persist()
+            try:
+                with ThreadPoolExecutor(max_workers=3) as pool:
+                    f_validated = pool.submit(
+                        lambda: result.validated.drop("violations")
+                        .write.mode("overwrite")
+                        .parquet(f"{out}/validated")
                     )
+                    f_violations = pool.submit(
+                        lambda: result.violations.write.mode("overwrite").parquet(
+                            f"{out}/violations"
+                        )
+                    )
+                    f_summary = pool.submit(result.summary.collect)
+                    f_validated.result()
+                    f_violations.result()
+                    summary_rows = f_summary.result()
+            finally:
+                result.validated.unpersist()
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            seen = {r[PART_ID] for r in summary_rows}
+            records = [
+                (
+                    run_id,
+                    int(r[PART_ID]),
+                    "done",
+                    int(r["rows"]),
+                    int(r["valid_rows"]),
+                    int(r["invalid_rows"]),
+                    int(r["violation_count"]),
+                    wall_ms,
+                    wave,
+                    fingerprint,
+                    input_fingerprint,
                 )
-                f_summary = pool.submit(result.summary.collect)
-                f_validated.result()
-                f_violations.result()
-                summary_rows = f_summary.result()
-        finally:
-            result.validated.unpersist()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        seen = {r[PART_ID] for r in summary_rows}
-        records = [
-            (
-                run_id,
-                int(r[PART_ID]),
-                "done",
-                int(r["rows"]),
-                int(r["valid_rows"]),
-                int(r["invalid_rows"]),
-                int(r["violation_count"]),
-                wall_ms,
-                wave,
-                fingerprint,
-                input_fingerprint,
-            )
-            for r in summary_rows
-        ] + [
-            # Empty partitions still checkpoint (lineage completeness).
-            (run_id, p, "done", 0, 0, 0, 0, wall_ms, wave, fingerprint, input_fingerprint)
-            for p in wave_parts
-            if p not in seen
-        ]
-        store.append_rows(records)
-        waves_run += 1
-        parts_done += len(wave_parts)
+                for r in summary_rows
+            ] + [
+                # Empty partitions still checkpoint (lineage completeness).
+                (run_id, p, "done", 0, 0, 0, 0, wall_ms, wave, fingerprint, input_fingerprint)
+                for p in wave_parts
+                if p not in seen
+            ]
+            store.append_rows(records)
 
     return ResumableResult(
         run_id=run_id,
-        waves_run=waves_run,
-        parts_done=parts_done,
-        parts_skipped=parts_skipped,
+        waves_run=len(plan),
+        parts_done=sum(len(parts) for _, parts in plan),
+        parts_skipped=len(done),
     )

@@ -67,4 +67,4 @@ def validate_table_deduped(
     validated = with_partition_columns(
         validated, num_partitions, key_col=key_cols[0], skewed_keys=skewed_keys
     )
-    return _validation_run(validated, content_col, key_cols)
+    return _validation_run(validated, content_col, key_cols, bool(skewed_keys))

@@ -116,10 +116,13 @@ def validate_table(
     shuffling the content to co-locate by repo would cost more than the
     validation itself.  ``part_id`` is computed as a *column* (pure
     repo-hash); the per-partition summary then shuffles only the
-    map-side-combined aggregate rows — kilobytes, not the table.  A
-    giant monorepo cannot straggle this plan because work is split by
-    bytes, not by repo.  A checkpointed run clusters its input by
-    part_id once, in its stage (``checkpoint.store``).
+    map-side-combined aggregate rows — kilobytes, not the table.  The
+    kernel tasks follow the scan splits, so work is split by bytes, not
+    by repo — but only as evenly as the input's files allow: Spark packs
+    files into splits largest first, so a source that clusters a
+    monorepo's rows into a few large files can still hand one task most
+    of the rows.  A checkpointed run spreads every wave's rows evenly over
+    equal files once, in its stage (``checkpoint.store``).
     """
     if num_partitions is None:
         num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -129,7 +132,7 @@ def validate_table(
 
     validated = attach_verdict(base, make_validation_udf(graph)(F.col(content_col)))
     return _validation_run(
-        validated, content_col, key_cols, observe, with_offending_values
+        validated, content_col, key_cols, bool(skewed_keys), observe, with_offending_values
     )
 
 
@@ -137,11 +140,13 @@ def _validation_run(
     validated: DataFrame,
     content_col: str,
     key_cols: tuple[str, ...],
+    salted: bool,
     observe: "Observation | None" = None,
     with_offending_values: bool = False,
 ) -> ValidationRun:
     """The three output relations from a table that already carries the
-    verdict and the partition columns."""
+    verdict and the partition columns (``salted``: whether any key was
+    salted, i.e. whether salt_id can be other than 0)."""
     # Per-row identity invariant vs the fixture corpus (BASELINE.json
     # input_hint): sha256 of the exact content bytes, computed JVM-side.
     validated = validated.withColumn(
@@ -191,12 +196,19 @@ def _validation_run(
 
     # salt_id is never NULL, so the size of its set is its distinct
     # count; a countDistinct here would plan a second exchange (three
-    # jobs per collect instead of two).
+    # jobs per collect instead of two).  Unsalted, salt_id is the
+    # literal 0 and every part (every group) has seen one bucket: the
+    # literal keeps the set, and the ObjectHashAggregate it forces, out
+    # of the plan.
+    if salted:
+        buckets_seen = F.size(F.collect_set(SALT_ID)).cast("long")
+    else:
+        buckets_seen = F.lit(1).cast("long")
     summary = validated.groupBy(PART_ID).agg(
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("is_valid").cast("long")).alias("valid_rows"),
         F.sum((~F.col("is_valid")).cast("long")).alias("invalid_rows"),
         F.sum("n_violations").alias("violation_count"),
-        F.size(F.collect_set(SALT_ID)).cast("long").alias("salt_buckets_seen"),
+        buckets_seen.alias("salt_buckets_seen"),
     )
     return ValidationRun(validated=validated, violations=violations, summary=summary)

@@ -17,6 +17,8 @@ def store(spark, tmp_path):
 def test_full_run_then_resume_skips_everything(spark, store):
     import os
 
+    from medea_spark.checkpoint.store import stage_key
+
     df = generate_corpus(spark, 1200, seed=42)
     graph = corpus_schema_graph()
     first = run_validation_with_checkpoints(
@@ -24,7 +26,7 @@ def test_full_run_then_resume_skips_everything(spark, store):
     )
     assert first.parts_done == 8 and first.parts_skipped == 0
     # with no stage_location the input is staged under the store
-    assert os.path.exists(f"{store.location}/stage/run=r1/_SUCCESS")
+    assert os.path.exists(f"{store.location}/stage/run={stage_key('r1', '', 8, 2)}/_SUCCESS")
     # checkpoint rows cover all partitions with metrics
     ckpt = store.read().filter(F.col("run_id") == "r1")
     assert ckpt.select("part_id").distinct().count() == 8
@@ -208,7 +210,7 @@ def test_resume_rejects_changed_input_fingerprint(spark, store):
 
 def test_staged_waves_prune_and_resume(spark, store, tmp_path):
     """stage_location writes the part-id-assigned input partitioned by
-    part_id; every wave scan then prunes to its slice (PartitionFilters
+    wave_id; every wave scan then prunes to its slice (PartitionFilters
     at the source), and resume reuses the committed stage."""
     df = generate_corpus(spark, 600, seed=13)
     graph = corpus_schema_graph()
@@ -223,9 +225,12 @@ def test_staged_waves_prune_and_resume(spark, store, tmp_path):
 
     (staged_dir,) = glob.glob(f"{stage}/run=st-*")
     staged = spark.read.parquet(staged_dir)
-    wave = staged.filter(F.col("part_id").isin([0, 2]))
+    assert sorted(staged.columns[-3:]) == ["part_id", "salt_id", "wave_id"]
+    wave = staged.filter((F.col("wave_id") == 0) & F.col("part_id").isin([0, 2]))
     plan = wave._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "part_id" in plan
+    (pruned,) = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    assert "PartitionFilters: [isnotnull(wave_id" in pruned and "(wave_id" in pruned
+    assert wave.select("wave_id").distinct().collect() == [(0,)]
     n_wave = wave.select(F.input_file_name()).distinct().count()
     n_all = staged.select(F.input_file_name()).distinct().count()
     assert 0 < n_wave < n_all
@@ -283,39 +288,76 @@ def test_stage_without_fingerprint_warns(spark, store, tmp_path):
     assert any("input_fingerprint" in str(w.message) for w in caught)
 
 
-def test_stage_write_exchange_includes_salt(spark, store, tmp_path):
-    """The stage-write repartition must hash on (part_id, salt_id) so a
-    skewed monorepo's rows spread over several write tasks instead of
-    funneling into one straggler."""
-    from medea_spark.checkpoint.store import run_validation_with_checkpoints
-    from medea_spark.corpus import corpus_schema_graph, generate_corpus
-    from medea_spark.engine.partitioning import with_partition_columns
+def test_stage_write_spreads_one_repo_over_every_task(spark, store, tmp_path):
+    """The stage-write exchange hashes the row key, not the repo's
+    part: a single-repo input (every row in one part, so one wave)
+    lands in one file from every write task, even when no key was
+    detected as skewed and salted."""
+    import glob
+
+    import pyarrow.parquet as pq
 
     df = generate_corpus(spark, 400, seed=5).withColumn(
         "repo", F.lit("monorepo")  # single repo: all rows share part_id
     )
-    base = with_partition_columns(df, 4, skewed_keys=["monorepo"])
-    plan = base.repartition(
-        4, F.col("part_id"), F.col("salt_id")
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "salt_id" in plan  # exchange keys include the salt
-    stage = str(tmp_path / "stage-salt")
+    stage = str(tmp_path / "stage-one-repo")
     run_validation_with_checkpoints(
-        spark, df, corpus_schema_graph(), store, run_id="saltstage",
-        num_partitions=4, n_waves=2, skewed_keys=["monorepo"],
-        input_fingerprint="salt-test", stage_location=stage,
+        spark, df, corpus_schema_graph(), store, run_id="onerepo",
+        num_partitions=4, n_waves=2, input_fingerprint="one-repo",
+        stage_location=stage,
     )
-    staged = spark.read.parquet(f"{stage}/run=saltstage-*")
-    assert staged.select("salt_id").distinct().count() > 1
+    (wave_dir,) = glob.glob(f"{stage}/run=onerepo-*/wave_id=*")
+    rows = [pq.ParquetFile(f).metadata.num_rows for f in glob.glob(f"{wave_dir}/*.parquet")]
+    assert len(rows) == min(4, spark.sparkContext.defaultParallelism)
+    assert min(rows) > 0 and sum(rows) == 400
+
+
+def test_stage_waves_hold_equal_files_under_a_dominant_repo(spark, store, tmp_path):
+    """A repo holding most rows does not make the largest files of its
+    wave: every wave directory holds one file per write slot, and their
+    row counts are within 20% of each other.  The salt ids the skewed
+    repo takes are stored with the rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    df = generate_corpus(spark, 6000, seed=11)
+    df = df.withColumn(
+        "repo",
+        F.when(F.pmod(F.xxhash64("path"), F.lit(5)) < 3, F.lit("monorepo")).otherwise(
+            F.col("repo")
+        ),
+    )
+    assert df.filter(F.col("repo") == "monorepo").count() >= 3000
+    stage = str(tmp_path / "stage")
+    res = run_validation_with_checkpoints(
+        spark, df, corpus_schema_graph(), store, run_id="even", num_partitions=8,
+        n_waves=2, skewed_keys=["monorepo"], input_fingerprint="even",
+        stage_location=stage,
+    )
+    assert res.parts_done == 8
+    slots = min(8, spark.sparkContext.defaultParallelism)
+    waves = sorted(glob.glob(f"{stage}/run=even-*/wave_id=*"))
+    assert len(waves) == 2
+    for wave in waves:
+        rows = [pq.ParquetFile(f).metadata.num_rows for f in glob.glob(f"{wave}/*.parquet")]
+        assert len(rows) == slots
+        assert max(rows) <= 1.2 * min(rows), (wave, rows)
+    staged = spark.read.parquet(waves[0].rsplit("/", 1)[0])
+    assert staged.filter(F.col("repo") == "monorepo").select("salt_id").distinct().count() > 1
+    total = store.read().filter(F.col("run_id") == "even").agg(F.sum("rows")).first()[0]
+    assert total == 6000
 
 
 def test_resume_over_stage_written_one_task_per_part(spark, store, tmp_path):
-    """A committed stage written with one write task per part (the wider
-    exchange earlier versions used) resumes as is: it is read, not
-    rewritten, and every row is validated once."""
+    """A committed stage in another layout (partitioned by part_id,
+    one write task per part, under the key earlier versions used) is
+    never read as this run's stage: it is left untouched, the run
+    restages, and every row is validated once."""
     import glob
     import hashlib
 
+    from medea_spark.checkpoint.store import stage_key
     from medea_spark.engine.partitioning import PART_ID, SALT_ID, with_partition_columns
 
     df = generate_corpus(spark, 600, seed=13)
@@ -325,18 +367,59 @@ def test_resume_over_stage_written_one_task_per_part(spark, store, tmp_path):
     with_partition_columns(df, 8).repartition(8, PART_ID, SALT_ID).write.partitionBy(
         PART_ID
     ).parquet(staged_dir)
-    files = sorted(glob.glob(f"{staged_dir}/*/*.parquet"))
+    files = sorted(glob.glob(f"{staged_dir}/**", recursive=True))
     res = run_validation_with_checkpoints(
         spark, df, corpus_schema_graph(), store, run_id="wide", num_partitions=8,
         n_waves=2, input_fingerprint=fp, stage_location=stage,
     )
     assert res.parts_done == 8 and res.parts_skipped == 0
-    assert sorted(glob.glob(f"{staged_dir}/*/*.parquet")) == files
+    assert sorted(glob.glob(f"{staged_dir}/**", recursive=True)) == files
+    assert glob.glob(f"{stage}/run={stage_key('wide', fp, 8, 2)}/wave_id=*/*.parquet")
     validated = spark.read.parquet(f"{store.location}/run=wide/wave=*/validated")
     assert validated.count() == 600
+    assert validated.select("repo", "path", "commit").distinct().count() == (
+        df.select("repo", "path", "commit").distinct().count()
+    )
     assert validated.filter(F.col("is_valid") != F.col("expected_valid")).count() == 0
     total = store.read().filter(F.col("run_id") == "wide").agg(F.sum("rows")).first()[0]
     assert total == 600
+
+
+def test_resume_with_changed_wave_count_restages(spark, store, tmp_path):
+    """A run that crashed after its first wave's commit and is resumed
+    with another wave count restages under a new key (the old stage is
+    left as it was), runs only the parts not yet committed, and its
+    checkpoint rows cover every part and every row once."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from medea_spark.checkpoint.store import stage_key
+
+    df = generate_corpus(spark, 1200, seed=42)
+    graph = corpus_schema_graph()
+    stage = str(tmp_path / "stage")
+    kwargs = dict(run_id="rw", num_partitions=8, input_fingerprint="rw", stage_location=stage)
+    run_validation_with_checkpoints(spark, df, graph, store, n_waves=2, **kwargs)
+    # The crash: wave 1's commit never happened.
+    (wave1,) = [
+        f for f in glob.glob(f"{store._ckpt_path}/*.parquet")
+        if set(pq.read_table(f).column("wave").to_pylist()) == {1}
+    ]
+    os.remove(wave1)
+    old = f"{stage}/run={stage_key('rw', 'rw', 8, 2)}"
+    old_files = sorted(glob.glob(f"{old}/**", recursive=True))
+
+    resumed = run_validation_with_checkpoints(spark, df, graph, store, n_waves=4, **kwargs)
+    assert (resumed.parts_skipped, resumed.parts_done, resumed.waves_run) == (4, 4, 2)
+    assert sorted(glob.glob(f"{old}/**", recursive=True)) == old_files
+    new = f"{stage}/run={stage_key('rw', 'rw', 8, 4)}"
+    assert os.path.exists(f"{new}/_SUCCESS")
+    assert sorted(glob.glob(f"{new}/wave_id=*")) == [f"{new}/wave_id={w}" for w in range(4)]
+    ckpt = store.read().filter(F.col("run_id") == "rw")
+    assert sorted(r.part_id for r in ckpt.select("part_id").collect()) == list(range(8))
+    assert ckpt.agg(F.sum("rows")).first()[0] == 1200
 
 
 def _jobs_started(spark, action) -> int:

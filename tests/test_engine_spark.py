@@ -137,6 +137,24 @@ def test_summary_salt_buckets_seen_hand_count(run):
     assert max(got.values()) > 1  # the salted monorepo spreads its part
 
 
+def test_unsalted_summary_salt_buckets_seen_is_literal(spark):
+    """With no skewed key every part has seen one salt bucket: the same
+    value as the hand count, from a summary plan with no
+    ObjectHashAggregate (the aggregate a set of salt ids forces)."""
+    from collections import defaultdict
+
+    df = generate_corpus(spark, 1000, seed=42)
+    run = validate_table(df, corpus_schema_graph(), num_partitions=8)
+    seen = defaultdict(set)
+    for r in run.validated.select("part_id", "salt_id").collect():
+        seen[r["part_id"]].add(r["salt_id"])
+    got = {r["part_id"]: r["salt_buckets_seen"] for r in run.summary.collect()}
+    assert got == {p: len(s) for p, s in seen.items()}
+    assert set(got.values()) == {1}
+    plan = run.summary._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in plan and "ObjectHashAggregate" not in plan
+
+
 def test_checkpointed_sinks_match_validate_table(spark, tmp_path):
     # A checkpointed run (input shuffled once into its stage, then
     # validated wave by wave) and the shuffle-free validate_table agree
