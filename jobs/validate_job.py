@@ -37,9 +37,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--stage-location",
         default=None,
-        help="where the run stages its part-id-assigned input, partitioned "
-        "by part_id, so every wave scan prunes to its slice "
-        "(default: <checkpoints>/stage)",
+        help="where the run stages its part-id-assigned input, under "
+        "run=<stage key> and partitioned by wave_id, so every wave scan "
+        "prunes to its slice (default: <checkpoints>/stage)",
     )
     args = ap.parse_args(argv)
 

@@ -6,7 +6,9 @@ The settings below are the ones that matter at 100 TB:
 * AQE on (runtime re-planning, skew-join splitting, partition coalescing);
 * explicit shuffle-partition count (callers size it to the data);
 * Arrow enabled for the pandas-UDF validation kernel with a bounded
-  batch size so executor memory stays flat regardless of row width.
+  batch size so executor memory stays flat regardless of row width;
+* a codegen cache that holds a session's whole working set of generated
+  classes, so a query planned again compiles nothing (``get_spark``).
 """
 
 from __future__ import annotations
@@ -14,6 +16,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Capacity of Spark's JVM-wide cache of compiled generated classes
+# (static ``spark.sql.codegen.cache.maxEntries``, default 100).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -26,6 +32,23 @@ def get_spark(
 
     ``cores=None`` uses ``local[*]``; on a real cluster the master comes
     from spark-submit and these local settings are ignored.
+
+    The codegen cache is sized here because it is static and JVM-wide:
+    the JVM reads ``spark.sql.codegen.cache.maxEntries`` once, when the
+    first class is generated, and in local mode the driver's planning
+    compile and every executor task share that one cache.  It is a Guava
+    cache of 4 segments that each evict at capacity / 4: 1,000 entries
+    give 250 per segment, twice the largest repeated working set
+    measured even if all of it hashed to one segment.  Working sets of
+    generated classes (compiles counted by ``CodegenMetrics``, 4 cores):
+
+    * a ``census_checks`` pass plus its check: 100 classes (121 with the
+      set-up); at the default 100 entries each warm pass recompiled 56;
+    * a ``nightly_unique`` pass plus its check: 59 classes (70 with the
+      set-up); 0 recompiled per warm pass at either size;
+    * the tier-1 test session: 2,183 distinct classes, nearly all
+      planned once; it compiles 3,224 times at 100 entries and 2,270
+      times at 1,000.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or 0
@@ -51,6 +74,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -921,3 +921,61 @@ def test_check_job_ceilings(spark, keyed_scan):
     for rel in (suite, dim):
         assert "LocalRelation" in rel._jdf.queryExecution().analyzed().toString()
     assert _jobs(spark, "ceiling-read-results", lambda: (suite.collect(), dim.collect())) == 0
+
+
+def test_repeated_suite_compiles_no_new_code(spark, tmp_path_factory):
+    """A census-shaped sequence planned a second time in one session
+    compiles no generated class: the session's codegen cache holds the
+    sequence's whole working set.  At Spark's default of 100 entries
+    the second round recompiled 53-62 of the first round's 101."""
+    from medea_spark.checks import (
+        accepted_values,
+        matches,
+        min_rows,
+        not_null,
+        run_check_suite,
+        unique,
+    )
+    from medea_spark.corpus import corpus_schema_graph
+    from medea_spark.engine import validate_table, validate_table_dispatched
+    from medea_spark.engine.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    base = str(tmp_path_factory.mktemp("codegen_cache") / "base.parquet")
+    drift = base.replace("base", "drift")
+    generate_corpus(spark, 1200, seed=5, num_partitions=4).write.parquet(base)
+    generate_corpus(spark, 300, seed=5, drift=True, num_partitions=2).write.parquet(drift)
+    graph = corpus_schema_graph()
+    keys = ["repo", "path", "commit"]
+    langs = ["json", "yaml", "toml", "xml", "cfg"]
+    rules = [
+        not_null("content"),
+        accepted_values("lang", langs),
+        matches("commit", "^[0-9a-f]{16}$"),
+        unique(keys),
+        min_rows(1),
+    ]
+
+    def census_round():
+        df = spark.read.parquet(base)
+        run = validate_table(df, graph, num_partitions=8)
+        run.summary.collect()
+        run.violations.groupBy("failed_constraint").count().collect()
+        judged = validate_table_dispatched(df, {lang: graph for lang in langs[:4]}, key_col="lang")
+        judged.groupBy("lang", "is_valid").count().collect()
+        column_stats(df, keys + ["lang", "content"]).collect()
+        uniqueness_report(df, keys, salted=True).first()
+        referential_report(df, dim_repos(spark), "repo").collect()
+        sized = F.length("content").alias("size")
+        drift_decision(
+            lang_size_histogram(spark.read.parquet(drift).select("lang", sized), "lang", "size"),
+            lang_size_histogram(df.select("lang", sized), "lang", "size"),
+            on=["lang", "size_bucket"],
+        )
+        run_check_suite(df, rules).collect()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    census_round()
+    first = compiles.getCount()
+    census_round()
+    assert compiles.getCount() - first == 0
