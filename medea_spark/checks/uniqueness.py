@@ -25,12 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _key_counts(df: DataFrame, keys: list[str], salted: bool, salt_buckets: int = 32) -> DataFrame:
+def _key_counts(df: DataFrame, keys: list[str], salted: bool) -> DataFrame:
     """One row per key group, NULL key parts included: (keys..., dup_count)."""
     if salted:
         phase1 = (
             df.select(*keys)
-            .withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(salt_buckets)))
+            .withColumn("_salt", F.pmod(F.spark_partition_id(), F.lit(32)))  # salt buckets
             .groupBy(*keys, "_salt")
             .agg(F.count(F.lit(1)).alias("_partial"))
         )
@@ -38,9 +38,9 @@ def _key_counts(df: DataFrame, keys: list[str], salted: bool, salt_buckets: int 
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
 
 
-def duplicate_keys(df: DataFrame, keys: list[str], salted: bool = False, salt_buckets: int = 32) -> DataFrame:
+def duplicate_keys(df: DataFrame, keys: list[str], salted: bool = False) -> DataFrame:
     """Keys appearing more than once: (keys..., dup_count)."""
-    return _key_counts(df, keys, salted, salt_buckets).filter(F.col("dup_count") > 1)
+    return _key_counts(df, keys, salted).filter(F.col("dup_count") > 1)
 
 
 def uniqueness_report(df: DataFrame, keys: list[str], salted: bool = False) -> DataFrame:

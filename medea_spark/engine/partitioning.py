@@ -57,15 +57,13 @@ def with_partition_columns(
     df: DataFrame,
     num_partitions: int,
     key_col: str = "repo",
-    salt_col: str = "path",
     skewed_keys: list[str] | None = None,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Add deterministic ``part_id`` (repo-hash bucket) and ``salt_id``
-    (0 for normal repos; a path-hash bucket for giant monorepos).
+    (0 for normal repos; a ``path``-hash bucket for giant monorepos).
 
-    ``salt_buckets`` defaults to ``4 × num_partitions``: a repo big
-    enough to be salted should spread over ALL partitions, and the
+    A salted repo's rows take ``4 × num_partitions`` salt buckets: a repo
+    big enough to be salted should spread over ALL partitions, and the
     exchange re-hashes our bucket ids, so bucket granularity must be
     finer than the partition count for balls-in-bins collisions to
     average out (the 30M-row skew bench measured a fixed 16 buckets
@@ -73,18 +71,15 @@ def with_partition_columns(
     buckets still ~3× — max bin of B balls in B bins is ~3; at 4×
     granularity each hot-bucket share is a quarter as heavy and the
     max partition load converges toward fair share)."""
-    if salt_buckets is None:
-        salt_buckets = 4 * num_partitions
     part = F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_partitions)).cast("int")
     if skewed_keys:
         salt = (
             F.when(
                 F.col(key_col).isin(list(skewed_keys)),
-                F.pmod(F.xxhash64(F.col(salt_col)), F.lit(salt_buckets)).cast("int"),
+                F.pmod(F.xxhash64(F.col("path")), F.lit(4 * num_partitions)).cast("int"),
             )
             .otherwise(F.lit(0))
         )
     else:
         salt = F.lit(0)
     return df.withColumn(PART_ID, part).withColumn(SALT_ID, salt.cast("int"))
-

@@ -14,7 +14,10 @@ from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+# The repository root replaces this script's directory on sys.path: the
+# directory also holds profile.py, which would shadow the stdlib
+# ``profile`` module that pyspark imports.
+sys.path[0] = str(Path(__file__).resolve().parents[1])
 
 import __spark_entry__ as entrymod  # noqa: E402
 from medea_spark.engine.session import get_spark  # noqa: E402
